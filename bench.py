@@ -190,7 +190,7 @@ def summary_line(
         k for k in by_cost if k not in PINNED_SUMMARY_QUERIES
     ]
     keep = len(priority)
-    while keep > 1:
+    while keep >= 1:
         kept_names = sorted(priority[:keep], key=lambda k: -timings[k])
         line = dump({k: sig2[k] for k in kept_names}, len(timings) - keep)
         if len(line) <= TAIL_BUDGET:

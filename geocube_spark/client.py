@@ -631,8 +631,11 @@ class GeocubeClient:
 
     def find_container_layouts(self, flt: DatasetFilters) -> DataFrame:
         """J6 (pg_layouts.go:84-120): layouts of the selected datasets'
-        containers — DISTINCT container set per layout, ordered by layout."""
-        d = find_datasets(self.catalog.read("datasets"), None, flt)
+        containers — DISTINCT container set per layout, ordered by layout.
+        Records are read only for a time, tag or record-name filter, so a
+        dataset-only filter plans without the records join."""
+        records = self.catalog.read("records") if flt.has_record_predicates() else None
+        d = find_datasets(self.catalog.read("datasets"), records, flt)
         cl = self.catalog.read("container_layouts")
         return (
             d.select("container_uri")

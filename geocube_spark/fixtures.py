@@ -7,9 +7,15 @@ DuckDB oracle read the exact same bytes.  Pixel values are closed-form
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import os
+import shutil
+import threading
 import uuid
+from collections.abc import Callable, Iterable
 from datetime import datetime, timedelta
+from types import ModuleType
 
 import numpy as np
 import pyarrow as pa
@@ -41,9 +47,64 @@ def _uuid(kind: str, i: int) -> str:
 
 
 def default_dir() -> str:
-    return os.environ.get(
-        "GEOCUBE_FIXTURE_DIR", os.path.join(os.path.dirname(__file__), "..", ".fixtures")
+    return os.path.abspath(
+        os.environ.get(
+            "GEOCUBE_FIXTURE_DIR",
+            os.path.join(os.path.dirname(__file__), "..", ".fixtures"),
+        )
     )
+
+
+_LOCKS: dict[str, threading.Lock] = {}
+_LOCKS_GUARD = threading.Lock()
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    elif os.path.exists(path):
+        os.remove(path)
+
+
+def materialize_once(
+    out: str, build: Callable[[], object], *,
+    inputs: Iterable[str] = (), code: Iterable[ModuleType] = (),
+) -> str:
+    """Build the cache entry ``out`` (a file or directory) by calling
+    ``build()``, unless the sidecar ``<out>.key`` holds the current key: a
+    sha256 over the bytes of the ``inputs`` files and directories, the bytes
+    of the ``code`` modules and the source of ``build``.  Paths and mtimes
+    are not part of the key.  On a mismatch the old output and key are
+    removed first; the key is written last, so it marks a finished build.
+    Concurrent callers of one ``out`` build it once."""
+    out = os.path.abspath(out)
+    with _LOCKS_GUARD:
+        lock = _LOCKS.setdefault(out, threading.Lock())
+    with lock:
+        h = hashlib.sha256()
+        for root in inputs:
+            files = sorted(
+                os.path.join(d, n) for d, _, names in os.walk(root) for n in names
+            ) if os.path.isdir(root) else [root]
+            for p in files:
+                h.update(os.path.relpath(p, root).encode() + b"\0")
+                with open(p, "rb") as f:
+                    h.update(f.read())
+        for mod in code:
+            with open(mod.__file__, "rb") as f:
+                h.update(f.read())
+        h.update(inspect.getsource(build).encode())
+        key, key_path = h.hexdigest(), out + ".key"
+        if os.path.exists(key_path):
+            with open(key_path) as f:
+                if f.read().strip() == key:
+                    return out
+        _remove(key_path)
+        _remove(out)
+        build()
+        with open(key_path, "w") as f:
+            f.write(key + "\n")
+    return out
 
 
 def generate(out_dir: str | None = None, n_records: int = 200) -> str:

@@ -133,13 +133,6 @@ def bbox_intersects(bbox: Column, xmin: float, ymin: float, xmax: float, ymax: f
     )
 
 
-def bbox_intersects_sql(bbox_col: str, xmin: float, ymin: float, xmax: float, ymax: float) -> str:
-    return (
-        f"{bbox_col}.xmin <= {xmax} AND {bbox_col}.xmax >= {xmin} "
-        f"AND {bbox_col}.ymin <= {ymax} AND {bbox_col}.ymax >= {ymin}"
-    )
-
-
 # ------------------------------------------------------ exact phase (numpy)
 
 

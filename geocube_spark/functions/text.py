@@ -41,10 +41,6 @@ def bpe_ish_token_count_sql(c: str) -> str:
     return f"len(regexp_extract_all({c}, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]'))"
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def punct_ratio(col: Column) -> Column:
     """Fraction of non-alnum/non-space characters — quality signal."""
     punct = F.length(F.regexp_replace(col, r"[A-Za-z0-9\s]", ""))
@@ -62,23 +58,6 @@ def _in_markers(markers: list[str]):
     """1-arg HOF lambda factory: token ∈ marker set via array_contains."""
     arr = F.array(*[F.lit(m) for m in markers])
     return lambda t: F.array_contains(arr, t)
-
-
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    """stopword hits / token count for one language's marker set."""
-    markers = LANG_MARKERS[lang]
-    toks = F.split(F.lower(F.trim(col)), r"\s+")
-    hits = F.size(F.filter(toks, _in_markers(markers)))
-    return hits / F.greatest(F.size(toks), F.lit(1))
-
-
-def stopword_ratio_sql(c: str, lang: str = "en") -> str:
-    markers = ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
-    toks = f"regexp_split_to_array(lower(trim({c})), '\\s+')"
-    return (
-        f"len(list_filter({toks}, t -> t IN ({markers})))"
-        f" / greatest(len({toks}), 1)"
-    )
 
 
 def quality_score(col: Column) -> Column:

@@ -517,20 +517,6 @@ def valid_shape_per_cell(
     return clipped.groupBy("cell_uri", "record_id").applyInPandas(agg, out_schema)
 
 
-def exclude_full_containers(
-    per_cell_members: DataFrame,
-    container_stats: DataFrame,
-    max_records: int,
-) -> DataFrame:
-    """L4 (consolidater.go:436-456): drop dataset runs whose container is
-    already full (holds max_records) and untouched by this job — no work to
-    do for them.  ``container_stats``: (container_uri, n_records, dirty)."""
-    full = container_stats.filter(
-        (F.col("n_records") >= max_records) & (~F.col("dirty"))
-    ).select("container_uri")
-    return per_cell_members.join(full, "container_uri", "left_anti")
-
-
 def cog_reuse_short_circuit(
     datasets: DataFrame,
     layout_block: int,

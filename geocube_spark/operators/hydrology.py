@@ -87,9 +87,7 @@ def d8_flow_direction(cells: DataFrame) -> DataFrame:
     )
 
 
-def flow_accumulation(
-    cells: DataFrame, edges: DataFrame, rounds: int, checkpoint_every: int = 4
-) -> DataFrame:
+def flow_accumulation(cells: DataFrame, edges: DataFrame, rounds: int) -> DataFrame:
     """(i, j, acc): number of cells draining through (i, j), itself
     included.  Exact once ``rounds`` >= the longest flow-path length.
 
@@ -113,10 +111,9 @@ def flow_accumulation(
     ending at each cell: ceil(log2 rounds) joins + one groupBy replace
     ``rounds`` sequential join+groupBy+join rounds (38 jobs -> ~10 on the
     fixture).  State is O(cells * rounds) walk rows — the documented
-    O(n·depth) trade of the jump-pointer form; the per-iteration lazy
-    checkpoint keeps the audited plan size independent of ``rounds``
-    (``checkpoint_every`` is retained for API compatibility; the doubling
-    loop checkpoints each of its log2(rounds) iterations)."""
+    O(n·depth) trade of the jump-pointer form; a lazy checkpoint on each of
+    the log2(rounds) iterations keeps the audited plan size independent of
+    ``rounds``."""
     base = cells.select("i", "j")
     if rounds < 1:
         return base.withColumn("acc", F.lit(1).cast("long"))

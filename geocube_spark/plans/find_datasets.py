@@ -54,15 +54,19 @@ class DatasetFilters:
 
     extra_dataset_predicates: list[Column] = field(default_factory=list)
 
-    def needs_records(self) -> bool:
-        """Join-avoidance (O5): records joined only when referenced."""
+    def has_record_predicates(self) -> bool:
+        """A time, tag or record-name filter: only the records table can
+        answer it."""
         return (
             self.time_from is not None
             or self.time_to is not None
             or bool(self.tags)
             or self.record_name_glob is not None
-            or self.order
         )
+
+    def needs_records(self) -> bool:
+        """Join-avoidance (O5): records joined only when referenced."""
+        return self.has_record_predicates() or self.order
 
 
 def _tag_predicate(tags_col: Column, key: str, value: str) -> Column:
@@ -81,7 +85,11 @@ def find_datasets(
 
     Returns dataset rows, plus record datetime/name columns when the records
     join was taken.  No action is triggered — callers compose further.
+    Raises ``ValueError`` when ``flt`` filters on records but ``records`` is
+    None, rather than silently dropping those predicates.
     """
+    if records is None and flt.has_record_predicates():
+        raise ValueError("time, tag and record-name filters need the records table")
     d = datasets
 
     # --- dataset-side scalar predicates (pushdown-friendly, applied first)

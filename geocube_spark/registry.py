@@ -18,13 +18,13 @@ DuckDB 1.0 dialect notes (tested):
 
 from __future__ import annotations
 
-import hashlib
 import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geocube_spark import fixtures
 from geocube_spark.functions.dataformat import cast_expr, cast_sql
 from geocube_spark.functions.text import (
     bpe_ish_token_count,
@@ -50,7 +50,7 @@ from geocube_spark.plans.cube import group_by_record
 from geocube_spark.plans.find_datasets import DatasetFilters, find_datasets
 from geocube_spark.plans.find_records import RecordFilters, find_records
 
-FIXTURE_DIR = "/root/repo/.fixtures"
+FIXTURE_DIR = fixtures.default_dir()
 
 # fixture dmappings used by the cast query (fixtures.DMAPPINGS[0] -> UInt8)
 _SRC_DM = {
@@ -64,12 +64,28 @@ _DST_DM = {
 
 
 def ensure_fixtures() -> str:
-    # probe the NEWEST fixture table so stale fixture dirs regenerate
-    if not os.path.exists(os.path.join(FIXTURE_DIR, "warp_src_bng.parquet")):
-        from geocube_spark import fixtures
+    """The base fixture tables (fixtures.generate), the root of the cache:
+    a change to their code clears FIXTURE_DIR, and every derived fixture
+    rebuilds on its next use.  Each derived ``ensure_*`` calls this first,
+    so that clearing never races a derived build."""
+    from geocube_spark.functions import geometry
 
+    def build():
         fixtures.generate(FIXTURE_DIR, n_records=200)
-    return FIXTURE_DIR
+
+    return fixtures.materialize_once(FIXTURE_DIR, build, code=(fixtures, geometry))
+
+
+def _fixture(spark: SparkSession, table: str) -> DataFrame:
+    return spark.read.parquet(f"{ensure_fixtures()}/{table}.parquet")
+
+
+def _base_tables(*names: str) -> list[str]:
+    return [f"{FIXTURE_DIR}/{n}.parquet" for n in names]
+
+
+def _sf_tag(sf_dir: str) -> str:
+    return os.path.basename(sf_dir.rstrip("/")) or "default"
 
 
 def ensure_consolidated(spark: SparkSession) -> str:
@@ -77,14 +93,14 @@ def ensure_consolidated(spark: SparkSession) -> str:
     partitioned by cell, physically sorted by the interlacing pattern, so a
     time-series read of one block is a contiguous partition-pruned scan —
     the reference's docs/architecture/mucog.md benchmark restated."""
-    out = os.path.join(FIXTURE_DIR, "consolidated_tiles")
-    if not os.path.exists(out):
-        from geocube_spark.operators.consolidation import consolidate_tiles
+    from geocube_spark.operators import consolidation
 
-        fd = ensure_fixtures()
-        tiles = spark.read.parquet(f"{fd}/tiles.parquet")
-        datasets = spark.read.parquet(f"{fd}/datasets.parquet")
-        records = spark.read.parquet(f"{fd}/records.parquet")
+    out = os.path.join(ensure_fixtures(), "consolidated_tiles")
+
+    def build():
+        tiles = _fixture(spark, "tiles")
+        datasets = _fixture(spark, "datasets")
+        records = _fixture(spark, "records")
         joined = (
             tiles.join(
                 datasets.select("container_uri", "record_id").dropDuplicates(
@@ -103,8 +119,12 @@ def ensure_consolidated(spark: SparkSession) -> str:
             )
             .withColumn("cell_uri", F.concat_ws("_", "block_x", "block_y"))
         )
-        consolidate_tiles(joined, "Z=0>T>R>B", out)
-    return out
+        consolidation.consolidate_tiles(joined, "Z=0>T>R>B", out)
+
+    return fixtures.materialize_once(
+        out, build, inputs=_base_tables("tiles", "datasets", "records"),
+        code=(consolidation,),
+    )
 
 
 def ensure_pyramided(spark: SparkSession) -> str:
@@ -113,13 +133,13 @@ def ensure_pyramided(spark: SparkSession) -> str:
     plus the AVERAGE level-1 overview, written ``partitionBy("level")`` so
     the O8 auto-selection literal prunes whole level directories at the
     scan."""
-    out = os.path.join(FIXTURE_DIR, "pyramid_tiles")
-    if not os.path.exists(out):
-        from geocube_spark.operators.pyramid import build_level
+    from geocube_spark.operators import pyramid
 
-        fd = ensure_fixtures()
-        tiles = spark.read.parquet(f"{fd}/tiles.parquet")
-        datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    out = os.path.join(ensure_fixtures(), "pyramid_tiles")
+
+    def build():
+        tiles = _fixture(spark, "tiles")
+        datasets = _fixture(spark, "datasets")
         src = tiles.join(
             datasets.filter(F.col("dmapping.no_data") == -32768.0).select(
                 "container_uri"
@@ -127,44 +147,47 @@ def ensure_pyramided(spark: SparkSession) -> str:
             "container_uri",
             "left_semi",
         )
-        lvl1 = build_level(src, level=1, alg="AVERAGE", nodata=-32768.0)
-        src.select(*lvl1.columns).unionByName(lvl1).write.mode(
-            "overwrite"
-        ).partitionBy("level").parquet(out)
-    return out
+        lvl1 = pyramid.build_level(src, level=1, alg="AVERAGE", nodata=-32768.0)
+        src.select(*lvl1.columns).unionByName(lvl1).write.partitionBy(
+            "level"
+        ).parquet(out)
+
+    return fixtures.materialize_once(
+        out, build, inputs=_base_tables("tiles", "datasets"), code=(pyramid,)
+    )
 
 
 def ensure_zarr_fixture() -> str:
     """Closed-form Zarr v2 store: 2 bands x 100x100 float64, 32x32 chunks
     (edge chunks overhang and pad with fill -1), zlib compressor, value
     v(b,y,x) = (13x + 7y + 29b) mod 101 — fully re-derivable in SQL."""
-    out = os.path.join(FIXTURE_DIR, "zarr_demo")
-    if not os.path.exists(os.path.join(out, ".zarray")):
+    from geocube_spark.sources import zarr
+
+    out = os.path.join(ensure_fixtures(), "zarr_demo")
+
+    def build():
         import numpy as np
 
-        from geocube_spark.sources.zarr import write_zarr_array
-
-        ensure_fixtures()
         b, y, x = np.meshgrid(
             np.arange(2), np.arange(100), np.arange(100), indexing="ij"
         )
         arr = ((13 * x + 7 * y + 29 * b) % 101).astype(np.float64)
-        write_zarr_array(
+        zarr.write_zarr_array(
             out, arr, chunks=(1, 32, 32), compressor="zlib", fill_value=-1.0,
             attrs={"crs": "EPSG:4326", "transform": [0.01, 0.0, 0.0, 0.0, -0.01, 50.0]},
         )
-    return out
+
+    return fixtures.materialize_once(out, build, code=(zarr,))
 
 
 def ensure_stac_fixture() -> str:
     """Deterministic STAC item collection (JSONL, 40 items x 2 assets)."""
-    out = os.path.join(FIXTURE_DIR, "stac_items.jsonl")
-    if not os.path.exists(out):
-        from geocube_spark.sources.stac import write_stac_fixture
+    from geocube_spark.sources import stac
 
-        ensure_fixtures()
-        write_stac_fixture(out)
-    return out
+    out = os.path.join(ensure_fixtures(), "stac_items.jsonl")
+    return fixtures.materialize_once(
+        out, lambda: stac.write_stac_fixture(out), code=(stac,)
+    )
 
 
 # ------------------------------------------------------------ entity mapping
@@ -2276,50 +2299,20 @@ def minhash_near_duplicates(spark, sf_dir):
     return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
 
 
-def _table_fingerprint(sf_dir: str, table: str) -> str:
-    """(size, mtime_ns) identity of one source parquet table — the cache
-    key for persisted index fixtures (see _embeddings_fingerprint)."""
-    root = os.path.join(sf_dir, f"{table}.parquet")
-    parts = []
-    if os.path.isdir(root):
-        for dirpath, _, names in os.walk(root):
-            for n in sorted(names):
-                st = os.stat(os.path.join(dirpath, n))
-                parts.append(f"{n}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(root):
-        st = os.stat(root)
-        parts.append(f"{os.path.basename(root)}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.sha1("|".join(parts).encode()).hexdigest()
-
-
 def ensure_minhash_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the frozen-corpus LSH bucket index once per SF
     (dedup.build_minhash_index over the doc_id % 5 != 0 'already ingested'
-    majority), parquet partitioned by band.  Cache keyed on a fingerprint
-    of the source documents files, like the persisted IVF index."""
-    import json
-    import shutil
+    majority), parquet partitioned by band.  Keyed on the bytes of the
+    source documents, like the persisted IVF index."""
+    out = os.path.join(ensure_fixtures(), f"minhash_index_{_sf_tag(sf_dir)}")
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    out = os.path.join(FIXTURE_DIR, f"minhash_index_{tag}")
-    side = os.path.join(out, "_index_meta.json")
-    fp = _table_fingerprint(sf_dir, "documents")
-    stale = True
-    if os.path.exists(side):
-        with open(side) as f:
-            stale = json.load(f).get("source_fp") != fp
-    if stale:
+    def build():
         corpus = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 != 0)
-        tmp = out + "__build"
-        shutil.rmtree(tmp, ignore_errors=True)
-        dd.build_minhash_index(corpus).write.mode("overwrite").partitionBy(
-            "band"
-        ).parquet(tmp)
-        shutil.rmtree(out, ignore_errors=True)
-        os.replace(tmp, out)
-        with open(side, "w") as f:
-            json.dump({"source_fp": fp}, f)
-    return out
+        dd.build_minhash_index(corpus).write.partitionBy("band").parquet(out)
+
+    return fixtures.materialize_once(
+        out, build, inputs=[f"{sf_dir}/documents.parquet"], code=(dd,)
+    )
 
 
 @q(
@@ -2866,24 +2859,6 @@ def embedding_ivfpq_topk(spark, sf_dir):
     )
 
 
-def _embeddings_fingerprint(sf_dir: str) -> str:
-    """Cheap identity of the source embeddings table: (size, mtime_ns) of
-    every file under embeddings.parquet.  If the SF data is regenerated the
-    fingerprint changes and the cached index is rebuilt, so the persisted
-    index can never silently diverge from the on-the-fly IVF twin."""
-    root = os.path.join(sf_dir, "embeddings.parquet")
-    parts = []
-    if os.path.isdir(root):
-        for dirpath, _, names in os.walk(root):
-            for n in sorted(names):
-                st = os.stat(os.path.join(dirpath, n))
-                parts.append(f"{n}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(root):
-        st = os.stat(root)
-        parts.append(f"{os.path.basename(root)}:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.sha1("|".join(parts).encode()).hexdigest()
-
-
 def _scan_partition_pruned(plan: str, probe) -> int:
     """1 iff the executed plan's FileSourceScan carries PartitionFilters on
     ``cluster`` whose literal set contains EVERY probed id.  Parses the
@@ -2906,19 +2881,16 @@ def _scan_partition_pruned(plan: str, probe) -> int:
 def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the persisted IVF layout once per SF: cluster id as a
     partition column + centroid sidecar (similarity.ivf_build_index).
-    The cache is keyed on a fingerprint of the source embeddings files —
-    a regenerated SF table invalidates the committed index."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    out = os.path.join(FIXTURE_DIR, f"ivf_index_{tag}")
-    fp = _embeddings_fingerprint(sf_dir)
-    stale = True
-    if sim.ivf_sidecar_exists(out):
-        stale = sim.ivf_load_sidecar(out).get("meta", {}).get("source_fp") != fp
-    if stale:
-        sim.ivf_build_index(
-            _emb(spark, sf_dir), out, n_clusters=8, meta={"source_fp": fp}
-        )
-    return out
+    Keyed on the bytes of the source embeddings — a regenerated SF table
+    invalidates the committed index."""
+    out = os.path.join(ensure_fixtures(), f"ivf_index_{_sf_tag(sf_dir)}")
+
+    def build():
+        sim.ivf_build_index(_emb(spark, sf_dir), out, n_clusters=8)
+
+    return fixtures.materialize_once(
+        out, build, inputs=[f"{sf_dir}/embeddings.parquet"], code=(sim,)
+    )
 
 
 @q(
@@ -2968,25 +2940,17 @@ def embedding_ivf_indexed(spark, sf_dir):
 def ensure_ivf_appended_index(spark: SparkSession, sf_dir: str) -> str:
     """The INCREMENTAL-GROWTH twin of ensure_ivf_index: build the index
     from the even-vec_id half, then ivf_append the odd half with the
-    frozen quantizer.  Cache keyed on the embeddings fingerprint AND on
-    exactly one recorded append."""
-    import shutil
+    frozen quantizer.  Keyed like ensure_ivf_index."""
+    out = os.path.join(ensure_fixtures(), f"ivf_index_append_{_sf_tag(sf_dir)}")
 
-    tag = os.path.basename(sf_dir.rstrip("/")) or "default"
-    out = os.path.join(FIXTURE_DIR, f"ivf_index_append_{tag}")
-    fp = _embeddings_fingerprint(sf_dir)
-    stale = True
-    if sim.ivf_sidecar_exists(out):
-        meta = sim.ivf_load_sidecar(out).get("meta", {})
-        stale = meta.get("source_fp") != fp or meta.get("appends") != 1
-    if stale:
-        shutil.rmtree(out, ignore_errors=True)
+    def build():
         emb = _emb(spark, sf_dir)
-        first = emb.filter(F.col("vec_id") % 2 == 0)
-        rest = emb.filter(F.col("vec_id") % 2 == 1)
-        sim.ivf_build_index(first, out, n_clusters=8, meta={"source_fp": fp})
-        sim.ivf_append(rest, out)
-    return out
+        sim.ivf_build_index(emb.filter(F.col("vec_id") % 2 == 0), out, n_clusters=8)
+        sim.ivf_append(emb.filter(F.col("vec_id") % 2 == 1), out)
+
+    return fixtures.materialize_once(
+        out, build, inputs=[f"{sf_dir}/embeddings.parquet"], code=(sim,)
+    )
 
 
 @q(
@@ -4007,8 +3971,7 @@ def events_latest_per_user(spark, sf_dir):
     """,
 )
 def spatial_bbox_refine(spark, sf_dir):
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    datasets = _fixture(spark, "datasets")
     flt = DatasetFilters(
         status="ACTIVE", extent=(-168.0, -40.0, -160.0, -25.0), refine_srid=4326, order=False
     )
@@ -4044,8 +4007,7 @@ _CONC_RECT = (-2.0, -1.0, 2.5, 1.5)
 def spatial_concave_refine(spark, sf_dir):
     from geocube_spark.functions.geometry import bbox_intersects, make_intersects_udf
 
-    fd = ensure_fixtures()
-    df = spark.read.parquet(f"{fd}/concave_aoi.parquet")
+    df = _fixture(spark, "concave_aoi")
     exact = make_intersects_udf(_CONC_RECT)
     return (
         df.filter(bbox_intersects(F.col("bbox"), *_CONC_RECT))
@@ -4066,9 +4028,8 @@ def spatial_concave_refine(spark, sf_dir):
     """,
 )
 def cast_tiles_checksum(spark, sf_dir):
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/tiles.parquet")
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    tiles = _fixture(spark, "tiles")
+    datasets = _fixture(spark, "datasets")
     src = tiles.join(
         datasets.select("container_uri", "dmapping").filter(
             (F.col("dmapping.dtype") == "Int16") & (F.col("dmapping.exponent") == 1.0)
@@ -4126,10 +4087,9 @@ def cast_tiles_checksum(spark, sf_dir):
     """,
 )
 def mosaic_latest_first(spark, sf_dir):
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/tiles.parquet")
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
-    records = spark.read.parquet(f"{fd}/records.parquet")
+    tiles = _fixture(spark, "tiles")
+    datasets = _fixture(spark, "datasets")
+    records = _fixture(spark, "records")
     joined = (
         tiles.join(
             datasets.filter(F.col("dmapping.no_data") == -32768.0).select(
@@ -4222,9 +4182,8 @@ def mosaic_latest_first(spark, sf_dir):
     """,
 )
 def pyramid_level1(spark, sf_dir):
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/tiles.parquet")
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    tiles = _fixture(spark, "tiles")
+    datasets = _fixture(spark, "datasets")
     src = tiles.join(
         datasets.filter(F.col("dmapping.no_data") == -32768.0).select("container_uri"),
         "container_uri",
@@ -4416,8 +4375,7 @@ def xyz_tile_png(spark, sf_dir):
 
     from geocube_spark.operators.regrid import xyz_tile
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     tile = xyz_tile(tiles, 64, 43, 7, nodata=-1.0, src_srid=4326)
     dm = {
         "dtype": "Float64", "no_data": -1.0, "min_value": 0.0, "max_value": 96.0,
@@ -4515,8 +4473,7 @@ def cover_regular_grid(spark, sf_dir):
 def union_geometry_job(spark, sf_dir):
     from geocube_spark.operators.consolidation import union_footprints
 
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    datasets = _fixture(spark, "datasets")
     flt = DatasetFilters(status=None, locked_by_job_id="job-0", order=False)
     locked = find_datasets(datasets, None, flt).withColumn(
         "job_id", F.col("locked_by_job_id")
@@ -4565,8 +4522,7 @@ def union_geometry_job(spark, sf_dir):
 def aoi_buffer_union(spark, sf_dir):
     from geocube_spark.operators.consolidation import union_footprints
 
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    datasets = _fixture(spark, "datasets")
     flt = DatasetFilters(status=None, locked_by_job_id="job-0", order=False)
     locked = find_datasets(datasets, None, flt).withColumn(
         "job_id", F.col("locked_by_job_id")
@@ -4626,8 +4582,7 @@ def aoi_buffer_union(spark, sf_dir):
 def union_geometry_rotated(spark, sf_dir):
     from geocube_spark.operators.consolidation import union_polygon_footprints
 
-    fd = ensure_fixtures()
-    quads = spark.read.parquet(f"{fd}/rotated_footprints.parquet")
+    quads = _fixture(spark, "rotated_footprints")
     out = union_polygon_footprints(quads, ["job_id"])
     return out.select(
         "job_id", "n_datasets",
@@ -4691,8 +4646,7 @@ def valid_shape_rotated_cells(spark, sf_dir):
     from geocube_spark.functions.localdf import values_df
     from geocube_spark.operators.consolidation import valid_shape_per_cell_general
 
-    fd = ensure_fixtures()
-    quads = spark.read.parquet(f"{fd}/rotated_footprints.parquet").filter(
+    quads = _fixture(spark, "rotated_footprints").filter(
         F.col("kind") == "diamond"
     )
     cells = values_df(
@@ -4729,9 +4683,8 @@ def valid_shape_rotated_cells(spark, sf_dir):
     """,
 )
 def find_records_aoi(spark, sf_dir):
-    fd = ensure_fixtures()
-    records = spark.read.parquet(f"{fd}/records.parquet")
-    aoi = spark.read.parquet(f"{fd}/aoi.parquet")
+    records = _fixture(spark, "records")
+    aoi = _fixture(spark, "aoi")
     flt = RecordFilters(aoi_extent=(-165.0, -38.0, -150.0, -20.0))
     out = find_records(records, aoi, flt)
     return out.select("id", "name", "aoi_id")
@@ -4826,9 +4779,8 @@ def tag_merge_groups(spark, sf_dir):
 def valid_pixel_filter(spark, sf_dir):
     from geocube_spark.operators.mosaic import filter_valid_slices
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/tiles.parquet")
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    tiles = _fixture(spark, "tiles")
+    datasets = _fixture(spark, "datasets")
     src = tiles.filter(F.col("level") == 0).join(
         datasets.filter(F.col("dmapping.no_data") == -32768.0).select("container_uri"),
         "container_uri",
@@ -4861,8 +4813,7 @@ def valid_pixel_filter(spark, sf_dir):
 def cover_custom_cells(spark, sf_dir):
     from geocube_spark.operators.cover import cover_custom
 
-    fd = ensure_fixtures()
-    cells = spark.read.parquet(f"{fd}/cells.parquet")
+    cells = _fixture(spark, "cells")
     out = cover_custom([(-165.0, -38.0, -150.0, -20.0)], cells)
     return out.select(
         "id",
@@ -4950,8 +4901,7 @@ def cover_custom_subgrid(spark, sf_dir):
     resolution=100, cell_size=256 (span 25.6 km per subcell)."""
     from geocube_spark.operators.cover import cover_custom_subgrid as _cover
 
-    fd = ensure_fixtures()
-    cells = spark.read.parquet(f"{fd}/cells.parquet").filter(F.col("grid") == "mgrs_like")
+    cells = _fixture(spark, "cells").filter(F.col("grid") == "mgrs_like")
     out = _cover(
         [_SUBGRID_AOI], cells,
         {"subgrid": "regular", "resolution": "100", "cell_size": "256"},
@@ -4978,8 +4928,7 @@ def cover_custom_subgrid_singlecell(spark, sf_dir):
     singlecell): one tile per custom cell, URI cellID/originX/originY/w/h."""
     from geocube_spark.operators.cover import cover_custom_subgrid as _cover
 
-    fd = ensure_fixtures()
-    cells = spark.read.parquet(f"{fd}/cells.parquet").filter(F.col("grid") == "mgrs_like")
+    cells = _fixture(spark, "cells").filter(F.col("grid") == "mgrs_like")
     out = _cover([_SUBGRID_AOI], cells, {"resolution": "10"})
     return out.select(
         "cell_id", "srid", "cell_uri", "origin_x", "origin_y", "width", "height"
@@ -4999,26 +4948,26 @@ _CRUD_AOI = (-170.0, -40.0, -166.0, -38.0)
 
 
 def ensure_crud_catalog(spark: SparkSession) -> str:
-    from geocube_spark.client import GeocubeClient
-    from geocube_spark.functions.geometry import rect_wkb
+    from geocube_spark import client
+    from geocube_spark.functions import geometry
+    from geocube_spark.sources import catalog
 
-    root = os.path.join(FIXTURE_DIR, "crud_catalog")
-    client = GeocubeClient(spark, root)
-    if not client.catalog.exists("cells"):
-        client.create_grid(
+    root = os.path.join(ensure_fixtures(), "crud_catalog")
+
+    def build():
+        c = client.GeocubeClient(spark, root)
+        c.create_grid(
             "crud_mgrs",
             "two UTM-zone cells created through the API",
             [
                 {"id": cid, "crs": f"epsg:{srid}", "srid": srid,
-                 "geom_wkb": rect_wkb(*rect)}
+                 "geom_wkb": geometry.rect_wkb(*rect)}
                 for cid, srid, rect in _CRUD_CELLS
             ],
         )
-    if not client.catalog.exists("layouts"):
-        client.create_layout(
-            "crud_layout", {"grid": "crud_mgrs", "resolution": "10"}
-        )
-    return root
+        c.create_layout("crud_layout", {"grid": "crud_mgrs", "resolution": "10"})
+
+    return fixtures.materialize_once(root, build, code=(client, catalog, geometry))
 
 
 def _crud_cover_oracle() -> str:
@@ -5114,8 +5063,7 @@ def grid_crud_cover_roundtrip(spark, sf_dir):
 def reconsolidation_need(spark, sf_dir):
     from geocube_spark.operators.consolidation import reconsolidation_plan
 
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    datasets = _fixture(spark, "datasets")
     dm = {
         "dtype": "Int16", "no_data": -32768.0, "min_value": 0.0,
         "max_value": 10000.0, "real_min_value": 0.0, "real_max_value": 1.0,
@@ -5146,40 +5094,27 @@ def ensure_consolidate_job(spark: SparkSession) -> str:
     (job id deterministic in the job name, task ids deterministic in the
     job+container, so re-runs are byte-stable).  The fixture's job-0 locks
     are released first — the conflict arm is covered in
-    tests/test_client.py::TestConsolidateOrchestration."""
+    tests/test_client.py::TestConsolidateOrchestration.  Keyed on the code
+    that PRODUCES the catalog, so the oracle never hash-checks output the
+    current planning path no longer emits."""
     import shutil
 
-    root = os.path.join(FIXTURE_DIR, "consolidate_job_catalog")
-    marker = os.path.join(root, "_done")
-    # the marker is keyed to a hash of the code that PRODUCES the catalog,
-    # so a change to the planning path regenerates the fixture instead of
-    # hash-checking a stale frozen catalog (the oracle would otherwise keep
-    # passing against output the current code no longer emits)
-    import hashlib
+    from geocube_spark import client
+    from geocube_spark.operators import consolidation, cover
+    from geocube_spark.sources import catalog
+    from geocube_spark.streaming import jobs
 
-    pkg = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256()
-    for rel in ("client.py", "operators/consolidation.py",
-                "operators/cover.py", "streaming/jobs.py"):
-        with open(os.path.join(pkg, rel), "rb") as f:
-            h.update(f.read())
-    code_hash = h.hexdigest()
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() != code_hash:
-                os.remove(marker)
-    if not os.path.exists(marker):
-        from geocube_spark.client import GeocubeClient
+    fd = ensure_fixtures()
+    root = os.path.join(fd, "consolidate_job_catalog")
+    tables = ("aoi", "records", "variables", "instances", "containers",
+              "datasets", "layouts", "consolidation_params", "jobs",
+              "tasks", "locked_datasets")
 
-        fd = ensure_fixtures()
-        shutil.rmtree(root, ignore_errors=True)
+    def build():
         os.makedirs(root)
-        for t in ("aoi", "records", "variables", "instances", "containers",
-                  "datasets", "layouts", "consolidation_params", "jobs",
-                  "tasks", "locked_datasets"):
-            shutil.copy(os.path.join(fd, f"{t}.parquet"),
-                        os.path.join(root, f"{t}.parquet"))
-        c = GeocubeClient(spark, root)
+        for t in tables:
+            shutil.copy(f"{fd}/{t}.parquet", f"{root}/{t}.parquet")
+        c = client.GeocubeClient(spark, root)
         c.catalog.write(
             "datasets",
             c.catalog.read("datasets").withColumn(
@@ -5200,9 +5135,11 @@ def ensure_consolidate_job(spark: SparkSession) -> str:
             max_records=8,
         )
         c.consolidate("e2e", _CSLD_INSTANCE_0, "e2e_fine")
-        with open(marker, "w") as f:
-            f.write(code_hash)
-    return root
+
+    return fixtures.materialize_once(
+        root, build, inputs=_base_tables(*tables),
+        code=(client, consolidation, cover, jobs, catalog),
+    )
 
 
 @q(
@@ -5353,12 +5290,11 @@ def bucketed_catalog_join(spark, sf_dir):
     """,
 )
 def deletion_empties_containers(spark, sf_dir):
-    fd = ensure_fixtures()
-    d = spark.read.parquet(f"{fd}/datasets.parquet")
+    d = _fixture(spark, "datasets")
     doomed = d.filter(F.col("status") == "TODELETE").select("container_uri").distinct()
     survivors = d.filter(F.col("status") != "TODELETE").select("container_uri").distinct()
     dead = doomed.join(survivors, "container_uri", "left_anti")
-    containers = spark.read.parquet(f"{fd}/containers.parquet")
+    containers = _fixture(spark, "containers")
     return containers.join(
         dead.withColumnRenamed("container_uri", "uri"), "uri", "left_semi"
     ).select("uri", "managed", "storage_class")
@@ -5386,8 +5322,7 @@ def deletion_empties_containers(spark, sf_dir):
 def consolidation_work_skipping(spark, sf_dir):
     from geocube_spark.operators.consolidation import cog_reuse_short_circuit
 
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    datasets = _fixture(spark, "datasets")
     annotated = cog_reuse_short_circuit(
         datasets, layout_block=256, layout_dtype="Int16", layout_overviews=True
     )
@@ -5440,12 +5375,11 @@ def get_cube_pixels(spark, sf_dir):
 
     from geocube_spark.plans.cube import get_cube
 
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet").filter(
+    datasets = _fixture(spark, "datasets").filter(
         F.col("dmapping.no_data") == -32768.0
     )
-    records = spark.read.parquet(f"{fd}/records.parquet")
-    tiles = spark.read.parquet(f"{fd}/tiles.parquet").filter(F.col("level") == 0)
+    records = _fixture(spark, "records")
+    tiles = _fixture(spark, "tiles").filter(F.col("level") == 0)
     flt = DatasetFilters(
         status="ACTIVE",
         time_from=datetime(2018, 1, 1),
@@ -5505,8 +5439,7 @@ def get_cube_pixels(spark, sf_dir):
 def get_cube_pixels_webmercator(spark, sf_dir):
     from geocube_spark.operators.regrid import regrid_to_grid
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     out = regrid_to_grid(
         tiles,
         out_origin=(0.0, 6447000.0),
@@ -5574,8 +5507,7 @@ from geocube_spark.functions.crs import tm_forward_sql_columns  # noqa: E402
 def warp_cross_crs_utm(spark, sf_dir):
     from geocube_spark.operators.regrid import regrid_to_grid
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src_utm.parquet")
+    tiles = _fixture(spark, "warp_src_utm")
     out = regrid_to_grid(
         tiles,
         out_origin=(8.0, 60.125),
@@ -5640,8 +5572,7 @@ from geocube_spark.functions.crs import ps_forward_sql_columns  # noqa: E402
 def warp_cross_crs_polar(spark, sf_dir):
     from geocube_spark.operators.regrid import regrid_to_grid
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src_ps.parquet")
+    tiles = _fixture(spark, "warp_src_ps")
     out = regrid_to_grid(
         tiles,
         out_origin=(-2.0, -69.875),
@@ -5713,8 +5644,7 @@ from geocube_spark.functions.crs import lcc_forward_sql_columns  # noqa: E402
 def warp_cross_crs_lcc(spark, sf_dir):
     from geocube_spark.operators.regrid import regrid_to_grid
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src_lcc.parquet")
+    tiles = _fixture(spark, "warp_src_lcc")
     out = regrid_to_grid(
         tiles,
         out_origin=(2.0, 47.125),
@@ -5769,8 +5699,7 @@ def warp_cross_crs_lcc(spark, sf_dir):
 def focal_mean_blocks(spark, sf_dir):
     from geocube_spark.operators.focal import focal_mean
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     out = focal_mean(tiles, block=64)
     return (
         out.select(
@@ -5830,8 +5759,7 @@ def focal_terrain_indices(spark, sf_dir):
         focal_tri,
     )
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
 
     def block_sum(df, alias):
         return (
@@ -6161,8 +6089,7 @@ def region_polygonize(spark, sf_dir):
 def focal_morphology_open(spark, sf_dir):
     from geocube_spark.operators.focal import focal_dilate, focal_erode
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     opened = focal_dilate(focal_erode(tiles, block=64), block=64)
     return (
         opened.select(
@@ -6223,10 +6150,9 @@ def focal_morphology_open(spark, sf_dir):
 def focal_slope_blocks(spark, sf_dir):
     from geocube_spark.operators.focal import focal_slope
 
-    fd = ensure_fixtures()
     # use the 1024 m UTM fixture grid so cellsize is in meters (terrain
     # semantics), matching the oracle's 8*1024 divisor
-    tiles = spark.read.parquet(f"{fd}/warp_src_utm.parquet")
+    tiles = _fixture(spark, "warp_src_utm")
     out = focal_slope(tiles, cellsize=1024.0, block=64)
     return (
         out.select(
@@ -6291,8 +6217,7 @@ def focal_slope_blocks(spark, sf_dir):
 def focal_hillshade_blocks(spark, sf_dir):
     from geocube_spark.operators.focal import focal_hillshade
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src_utm.parquet")
+    tiles = _fixture(spark, "warp_src_utm")
     out = focal_hillshade(tiles, cellsize=1024.0, z_factor=30.0, block=64)
     return (
         out.select(
@@ -6342,8 +6267,7 @@ def focal_hillshade_blocks(spark, sf_dir):
 def focal_gaussian_blocks(spark, sf_dir):
     from geocube_spark.operators.focal import focal_gaussian
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     out = focal_gaussian(tiles, block=64)
     return (
         out.select(
@@ -6380,8 +6304,7 @@ def focal_gaussian_blocks(spark, sf_dir):
 def raster_point_sample(spark, sf_dir):
     from geocube_spark.operators.focal import sample_points
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     res = 0.015625
     points = spark.range(0, 16, 1, 1).select(
         F.col("id").alias("point_id"),
@@ -6428,8 +6351,7 @@ def raster_point_sample(spark, sf_dir):
 def zonal_statistics(spark, sf_dir):
     from geocube_spark.operators.zonal import zonal_stats
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     res = 0.015625
     zones = spark.range(0, 9, 1, 1).select(
         F.col("id").cast("int").alias("zone_id"),
@@ -6479,8 +6401,7 @@ def zonal_statistics(spark, sf_dir):
 def band_normalized_difference(spark, sf_dir):
     from geocube_spark.operators.algebra import normalized_difference
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     two_band = tiles.withColumn(
         "px2", F.transform(F.col("px"), lambda x: (x * 3 + 7) % 97)
     )
@@ -6541,8 +6462,7 @@ from geocube_spark.functions.spatialkeys import (  # noqa: E402
     """,
 )
 def geohash_spatial_index(spark, sf_dir):
-    fd = ensure_fixtures()
-    d = spark.read.parquet(f"{fd}/datasets.parquet").select(
+    d = _fixture(spark, "datasets").select(
         ((F.col("bbox.xmin") + F.col("bbox.xmax")) / 2).alias("cx"),
         ((F.col("bbox.ymin") + F.col("bbox.ymax")) / 2).alias("cy"),
         F.floor((F.col("bbox.xmin") + 180) / 0.5).cast("long").alias("gx"),
@@ -6757,9 +6677,8 @@ def bap_cloudfree_composite(spark, sf_dir):
 def pyramid_incremental_refresh(spark, sf_dir):
     from geocube_spark.operators.pyramid import build_pyramid, pyramid_delta
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/tiles.parquet")
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    tiles = _fixture(spark, "tiles")
+    datasets = _fixture(spark, "datasets")
     src = tiles.join(
         datasets.filter(F.col("dmapping.no_data") == -32768.0).select(
             "container_uri"
@@ -6902,8 +6821,7 @@ def quadkey_spatial_index(spark, sf_dir):
         quadkey_from_xyz_expr,
     )
 
-    fd = ensure_fixtures()
-    d = spark.read.parquet(f"{fd}/datasets.parquet").select(
+    d = _fixture(spark, "datasets").select(
         ((F.col("bbox.xmin") + F.col("bbox.xmax")) / 2).alias("cx"),
         ((F.col("bbox.ymin") + F.col("bbox.ymax")) / 2).alias("cy"),
     )
@@ -6958,8 +6876,7 @@ def quadkey_spatial_index(spark, sf_dir):
 def pansharpen_brovey_q(spark, sf_dir):
     from geocube_spark.operators.algebra import pansharpen_brovey
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     multiband = (
         tiles.withColumn("g", F.transform(F.col("px"), lambda x: (x * 3 + 7) % 97))
         .withColumn("b", F.transform(F.col("px"), lambda x: (x * 5 + 11) % 97))
@@ -7021,8 +6938,7 @@ def pansharpen_brovey_q(spark, sf_dir):
 def histogram_equalization(spark, sf_dir):
     from geocube_spark.operators.algebra import histogram_equalize
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     eq = histogram_equalize(tiles, bins=97, vmin=0.0, vmax=97.0)
     return (
         eq.select(
@@ -7221,8 +7137,7 @@ def idw_interpolation_q(spark, sf_dir):
 def mosaic_feather_blend_q(spark, sf_dir):
     from geocube_spark.operators.mosaic import feather_blend
 
-    fd = ensure_fixtures()
-    src = spark.read.parquet(f"{fd}/warp_src.parquet")
+    src = _fixture(spark, "warp_src")
     a = src.select(
         "block_x", "block_y", "px",
         F.lit(0).alias("fp_x0"), F.lit(96).alias("fp_x1"),
@@ -7296,8 +7211,7 @@ def mosaic_feather_blend_q(spark, sf_dir):
 def qa_band_mask_q(spark, sf_dir):
     from geocube_spark.operators.algebra import qa_mask_summary
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet").withColumn(
+    tiles = _fixture(spark, "warp_src").withColumn(
         "qa",
         F.transform(
             "px", lambda v: (v.cast("long") * F.lit(2654435761)) % 1024
@@ -7462,8 +7376,7 @@ def zarr_block_read(spark, sf_dir):
 def raster_proximity(spark, sf_dir):
     from geocube_spark.operators.proximity import proximity_summary
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     return proximity_summary(tiles, max_dist=16, target_value=0.0)
 
 
@@ -7505,8 +7418,7 @@ def raster_proximity(spark, sf_dir):
 def raster_proximity_dense(spark, sf_dir):
     from geocube_spark.operators.proximity import proximity_summary
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet").withColumn(
+    tiles = _fixture(spark, "warp_src").withColumn(
         "px", F.transform("px", lambda v: v % 3)
     )
     return proximity_summary(tiles, max_dist=8, target_value=0.0)
@@ -7560,8 +7472,7 @@ def raster_proximity_dense(spark, sf_dir):
 def histogram_matching_q(spark, sf_dir):
     from geocube_spark.operators.algebra import histogram_match
 
-    fd = ensure_fixtures()
-    src = spark.read.parquet(f"{fd}/warp_src.parquet")
+    src = _fixture(spark, "warp_src")
     ref = src.withColumn(
         "px",
         F.transform(
@@ -7623,8 +7534,7 @@ def histogram_matching_q(spark, sf_dir):
 def temporal_median_composite(spark, sf_dir):
     from geocube_spark.operators.mosaic import temporal_composite
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     layers = tiles.select(
         "block_x", "block_y", "px",
         F.explode(
@@ -7694,8 +7604,7 @@ from geocube_spark.functions.crs import sinu_forward_sql_columns  # noqa: E402
 def warp_cross_crs_sinusoidal(spark, sf_dir):
     from geocube_spark.operators.regrid import regrid_to_grid
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src_sinu.parquet")
+    tiles = _fixture(spark, "warp_src_sinu")
     out = regrid_to_grid(
         tiles,
         out_origin=(9.0, 45.125),
@@ -7760,8 +7669,7 @@ from geocube_spark.functions.crs import tmgrid_from_wgs84_sql_ctes  # noqa: E402
 def warp_cross_crs_bng(spark, sf_dir):
     from geocube_spark.operators.regrid import regrid_to_grid
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src_bng.parquet")
+    tiles = _fixture(spark, "warp_src_bng")
     out = regrid_to_grid(
         tiles,
         out_origin=(-1.5, 51.625),
@@ -7831,8 +7739,7 @@ from geocube_spark.functions.crs import aea_forward_sql_columns  # noqa: E402
 def warp_cross_crs_albers(spark, sf_dir):
     from geocube_spark.operators.regrid import regrid_to_grid
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src_aea.parquet")
+    tiles = _fixture(spark, "warp_src_aea")
     out = regrid_to_grid(
         tiles,
         out_origin=(-97.0, 38.125),
@@ -7905,8 +7812,7 @@ def warp_cross_crs_laea(spark, sf_dir):
     from geocube_spark.functions.crs import parse_crs
     from geocube_spark.operators.regrid import regrid_to_grid
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src_laea.parquet")
+    tiles = _fixture(spark, "warp_src_laea")
     # resolve the source CRS through the proj4 PARAMETER path (must dedupe
     # onto the registered EPSG:3035), proving the constructor is the same
     # code path a custom LAEA would take
@@ -8014,8 +7920,7 @@ def warp_cross_crs_gridshift(spark, sf_dir):
     )
     from geocube_spark.operators.regrid import regrid_to_grid
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+    tiles = _fixture(spark, "warp_src")
     r, c = np.mgrid[0:16, 0:16]
     grid = ShiftGrid(
         lon0=-0.5, lat0=47.5, step=0.25,
@@ -8118,8 +8023,7 @@ def _warp_pool_sql(agg: str) -> str:
 def _warp_pool_query(spark, sf_dir, method: str):
     from geocube_spark.operators.regrid import regrid_to_grid
 
-    fd = ensure_fixtures()
-    tiles = spark.read.parquet(f"{fd}/warp_src_lcc.parquet")
+    tiles = _fixture(spark, "warp_src_lcc")
     out = regrid_to_grid(
         tiles,
         out_origin=(2.25, 47.0),
@@ -8226,8 +8130,7 @@ def _register_upsample_query(method: str) -> None:
     def _fn(spark, sf_dir, _m=method):
         from geocube_spark.operators.regrid import regrid_to_grid
 
-        fd = ensure_fixtures()
-        tiles = spark.read.parquet(f"{fd}/warp_src.parquet")
+        tiles = _fixture(spark, "warp_src")
         out = regrid_to_grid(
             tiles,
             out_origin=(0.25, 49.75),  # 16 source px in from the corner
@@ -8265,13 +8168,12 @@ for _method in ("BILINEAR", "CUBIC", "CUBICSPLINE", "LANCZOS"):
 def complex_cast_roundtrip(spark, sf_dir):
     from geocube_spark.functions.dataformat import cast_expr
 
-    fd = ensure_fixtures()
     cm = {
         "dtype": "Complex64", "no_data": float("nan"), "min_value": 0.0,
         "max_value": 1.0, "real_min_value": 0.0, "real_max_value": 1.0,
         "exponent": 1.0,
     }
-    t = spark.read.parquet(f"{fd}/warp_src.parquet")
+    t = _fixture(spark, "warp_src")
     casted = t.select("block_x", "block_y", cast_expr(F.col("px"), cm, dict(cm)).alias("px"))
     return casted.select(
         "block_x",
@@ -8302,8 +8204,7 @@ def complex_cast_roundtrip(spark, sf_dir):
 def update_datasets_impact(spark, sf_dir):
     from geocube_spark.operators.admin import update_datasets_impact as impact
 
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    datasets = _fixture(spark, "datasets")
     return impact(datasets, DatasetFilters(status="ACTIVE", order=False))
 
 
@@ -8323,9 +8224,8 @@ def update_datasets_impact(spark, sf_dir):
     """,
 )
 def tidy_db_counts(spark, sf_dir):
-    fd = ensure_fixtures()
-    records = spark.read.parquet(f"{fd}/records.parquet")
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    records = _fixture(spark, "records")
+    datasets = _fixture(spark, "datasets")
     live = records.join(
         datasets.select("record_id").distinct(),
         records["id"] == F.col("record_id"),
@@ -8348,12 +8248,11 @@ def tidy_db_counts(spark, sf_dir):
     """,
 )
 def datasets_records_aoi_join(spark, sf_dir):
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet").filter(
+    datasets = _fixture(spark, "datasets").filter(
         F.col("status") == "ACTIVE"
     )
-    records = spark.read.parquet(f"{fd}/records.parquet")
-    aoi = spark.read.parquet(f"{fd}/aoi.parquet")
+    records = _fixture(spark, "records")
+    aoi = _fixture(spark, "aoi")
     return (
         datasets.join(
             F.broadcast(
@@ -8385,9 +8284,8 @@ def datasets_records_aoi_join(spark, sf_dir):
     """,
 )
 def locked_datasets_join(spark, sf_dir):
-    fd = ensure_fixtures()
-    locked = spark.read.parquet(f"{fd}/locked_datasets.parquet")
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    locked = _fixture(spark, "locked_datasets")
+    datasets = _fixture(spark, "datasets")
     return (
         locked.join(datasets, locked["dataset_id"] == datasets["id"])
         .groupBy("job_id", "flag")
@@ -8415,8 +8313,7 @@ def locked_datasets_join(spark, sf_dir):
 def job_task_counters(spark, sf_dir):
     from geocube_spark.streaming.jobs import task_counters
 
-    fd = ensure_fixtures()
-    tasks = spark.read.parquet(f"{fd}/tasks.parquet")
+    tasks = _fixture(spark, "tasks")
     return task_counters(tasks)
 
 
@@ -8496,8 +8393,7 @@ def valid_shape_per_cell_q(spark, sf_dir):
     from geocube_spark.functions.localdf import values_df
     from geocube_spark.operators.consolidation import valid_shape_per_cell
 
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet").filter(
+    datasets = _fixture(spark, "datasets").filter(
         F.col("status") == "ACTIVE"
     )
     cells = values_df(
@@ -8533,8 +8429,7 @@ def valid_shape_per_cell_q(spark, sf_dir):
     """,
 )
 def spatial_antimeridian(spark, sf_dir):
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    datasets = _fixture(spark, "datasets")
     # extent with xmin > xmax = crosses the antimeridian
     flt = DatasetFilters(status="ACTIVE", extent=(179.0, 9.0, -179.0, 12.0), order=False)
     return find_datasets(datasets, None, flt).select("id")
@@ -8676,14 +8571,16 @@ def timeseries_block_read(spark, sf_dir):
 # directly — count and per-name tag/datetime checksums must survive the
 # ingest round trip exactly.
 def ensure_ingested_catalog(spark: SparkSession) -> str:
-    from geocube_spark.sources.catalog import Catalog
+    from geocube_spark.sources import catalog
 
-    root = os.path.join(FIXTURE_DIR, "ingested_catalog")
-    cat = Catalog(spark, root)
-    if not cat.exists("records"):
-        fd = ensure_fixtures()
-        cat.write("records", spark.read.parquet(f"{fd}/records.parquet"))
-    return root
+    root = os.path.join(ensure_fixtures(), "ingested_catalog")
+
+    def build():
+        catalog.Catalog(spark, root).write("records", _fixture(spark, "records"))
+
+    return fixtures.materialize_once(
+        root, build, inputs=_base_tables("records"), code=(catalog,)
+    )
 
 
 @q(
@@ -8743,8 +8640,7 @@ def png_tile_roundtrip(spark, sf_dir):
     from geocube_spark.functions.localdf import values_df
     from geocube_spark.sources.png import decode_png, slice_to_png
 
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    datasets = _fixture(spark, "datasets")
     cu = (
         datasets.filter(
             (F.col("dmapping.dtype") == "Int16")
@@ -8754,7 +8650,7 @@ def png_tile_roundtrip(spark, sf_dir):
         .first()[0]
     )
     tile = (
-        spark.read.parquet(f"{fd}/tiles.parquet")
+        _fixture(spark, "tiles")
         .filter(
             (F.col("container_uri") == cu)
             & (F.col("band") == 1)
@@ -8830,8 +8726,7 @@ def jpeg_tile_roundtrip(spark, sf_dir):
     from geocube_spark.functions.localdf import values_df
     from geocube_spark.sources.jpeg import decode_jpeg, encode_jpeg
 
-    fd = ensure_fixtures()
-    datasets = spark.read.parquet(f"{fd}/datasets.parquet")
+    datasets = _fixture(spark, "datasets")
     cu = (
         datasets.filter(
             (F.col("dmapping.dtype") == "Int16")
@@ -8841,7 +8736,7 @@ def jpeg_tile_roundtrip(spark, sf_dir):
         .first()[0]
     )
     tile = (
-        spark.read.parquet(f"{fd}/tiles.parquet")
+        _fixture(spark, "tiles")
         .filter(
             (F.col("container_uri") == cu)
             & (F.col("band") == 1)
@@ -8884,11 +8779,13 @@ def ensure_mucog_interlaced(spark: SparkSession) -> str:
     (layouts.proto:41-66): ``Z=0>T>R>B;Z=1:>R>T>B`` — timeseries-interlaced
     full resolution, geographically-clustered overviews.  2 records × 4×4
     full-res blocks + their 2×2 level-1 overviews, 16-px tiles."""
-    out = os.path.join(FIXTURE_DIR, "mucog_interlaced_fixture.tif")
-    if not os.path.exists(out):
-        import numpy as np
+    from geocube_spark.operators import consolidation
+    from geocube_spark.sources import gtiff
 
-        from geocube_spark.operators.consolidation import consolidate_to_mucog
+    out = os.path.join(ensure_fixtures(), "mucog_interlaced_fixture.tif")
+
+    def build():
+        import numpy as np
 
         n = 16
         rows = []
@@ -8927,7 +8824,7 @@ def ensure_mucog_interlaced(spark: SparkSession) -> str:
             "b:double,c:double,d:double,e:double,f:double>, crs_srid int, "
             "record_id string, record_datetime string",
         )
-        row = consolidate_to_mucog(
+        row = consolidation.consolidate_to_mucog(
             tiles,
             dtype="float64",
             compression="deflate",
@@ -8935,7 +8832,8 @@ def ensure_mucog_interlaced(spark: SparkSession) -> str:
         ).collect()[0]
         with open(out, "wb") as f:
             f.write(bytes(row["tiff"]))
-    return out
+
+    return fixtures.materialize_once(out, build, code=(consolidation, gtiff))
 
 
 @q(
@@ -9016,14 +8914,15 @@ def ensure_mucog(spark: SparkSession) -> str:
     consolidate_to_mucog → sources/gtiff.write_tiff bytes) from the tile
     fixtures: 12 record images × 2×2 blocks, block-interlaced so a
     time-series of one block is one contiguous byte range."""
-    out = os.path.join(FIXTURE_DIR, "mucog_fixture.tif")
-    if not os.path.exists(out):
-        from geocube_spark.operators.consolidation import consolidate_to_mucog
+    from geocube_spark.operators import consolidation
+    from geocube_spark.sources import gtiff
 
-        fd = ensure_fixtures()
-        tiles = spark.read.parquet(f"{fd}/tiles.parquet")
-        datasets = spark.read.parquet(f"{fd}/datasets.parquet")
-        records = spark.read.parquet(f"{fd}/records.parquet")
+    out = os.path.join(ensure_fixtures(), "mucog_fixture.tif")
+
+    def build():
+        tiles = _fixture(spark, "tiles")
+        datasets = _fixture(spark, "datasets")
+        records = _fixture(spark, "records")
         # image identity = SOURCE CONTAINER (several containers can share a
         # record in the fixtures); record time orders the images, container
         # uri tie-breaks deterministically
@@ -9046,12 +8945,16 @@ def ensure_mucog(spark: SparkSession) -> str:
             .withColumn("record_id", F.col("container_uri"))
             .withColumn("out_container_uri", F.lit("mucog://fixture"))
         )
-        row = consolidate_to_mucog(
+        row = consolidation.consolidate_to_mucog(
             joined, dtype="float64", compression="deflate", tile_order="block"
         ).collect()[0]
         with open(out, "wb") as f:
             f.write(bytes(row["tiff"]))
-    return out
+
+    return fixtures.materialize_once(
+        out, build, inputs=_base_tables("tiles", "datasets", "records"),
+        code=(consolidation, gtiff),
+    )
 
 
 # S5/S6 at the BYTE level: the reference's headline benchmark restated
@@ -9151,14 +9054,13 @@ def mucog_block_read(spark, sf_dir):
     """,
 )
 def find_container_layouts_q(spark, sf_dir):
-    fd = ensure_fixtures()
     d = (
-        spark.read.parquet(f"{fd}/datasets.parquet")
+        _fixture(spark, "datasets")
         .filter(F.col("status") == "ACTIVE")
         .select("container_uri")
         .dropDuplicates()
     )
-    cl = spark.read.parquet(f"{fd}/container_layouts.parquet")
+    cl = _fixture(spark, "container_layouts")
     return (
         d.join(F.broadcast(cl), "container_uri")
         .groupBy("layout_name")
@@ -9863,8 +9765,8 @@ def oracle_sql() -> dict[str, str]:
 
 def ensure_task_retry_job(spark: SparkSession) -> str:
     """Materialize ONCE the per-task failure-accounting scenario over a
-    copy of the fixture catalog (keyed to a hash of the code that drives
-    it, so any change to the accounting path regenerates the fixture):
+    copy of the fixture catalog (keyed on the code that drives it, so any
+    change to the accounting path regenerates the fixture):
 
       1. consolidate() a one-task-per-record job (max_records=1 world-cell
          layout) on the instance with the most tiled datasets;
@@ -9884,30 +9786,22 @@ def ensure_task_retry_job(spark: SparkSession) -> str:
     import json as _json
     import shutil
 
-    root = os.path.join(FIXTURE_DIR, "task_retry_catalog")
-    marker = os.path.join(root, "_done")
-    pkg = os.path.dirname(os.path.abspath(__file__))
-    h = hashlib.sha256()
-    for rel in ("client.py", "operators/consolidation.py", "streaming/jobs.py"):
-        with open(os.path.join(pkg, rel), "rb") as f:
-            h.update(f.read())
-    code_hash = h.hexdigest()
-    if os.path.exists(marker):
-        with open(marker) as f:
-            if f.read().strip() != code_hash:
-                os.remove(marker)
-    if not os.path.exists(marker):
-        from geocube_spark.client import GeocubeClient
+    from geocube_spark import client
+    from geocube_spark.operators import consolidation
+    from geocube_spark.sources import catalog
+    from geocube_spark.streaming import jobs
 
-        fd = ensure_fixtures()
-        shutil.rmtree(root, ignore_errors=True)
+    fd = ensure_fixtures()
+    root = os.path.join(fd, "task_retry_catalog")
+    tables = ("aoi", "records", "variables", "instances", "containers",
+              "datasets", "tiles", "layouts", "consolidation_params",
+              "jobs", "tasks", "locked_datasets")
+
+    def build():
         os.makedirs(root)
-        for t in ("aoi", "records", "variables", "instances", "containers",
-                  "datasets", "tiles", "layouts", "consolidation_params",
-                  "jobs", "tasks", "locked_datasets"):
-            shutil.copy(os.path.join(fd, f"{t}.parquet"),
-                        os.path.join(root, f"{t}.parquet"))
-        c = GeocubeClient(spark, root)
+        for t in tables:
+            shutil.copy(f"{fd}/{t}.parquet", f"{root}/{t}.parquet")
+        c = client.GeocubeClient(spark, root)
         c.catalog.write(
             "datasets",
             c.catalog.read("datasets").withColumn(
@@ -9984,9 +9878,11 @@ def ensure_task_retry_job(spark: SparkSession) -> str:
         )
         state, deletion_id = c.process_consolidation_job(job)
         assert state == "DONE" and deletion_id, state
-        with open(marker, "w") as f:
-            f.write(code_hash)
-    return root
+
+    return fixtures.materialize_once(
+        root, build, inputs=_base_tables(*tables),
+        code=(client, consolidation, jobs, catalog),
+    )
 
 
 # Per-task failure accounting end-to-end (job.go:676-800 UpdateTask /

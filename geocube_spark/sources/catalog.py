@@ -117,8 +117,8 @@ class Catalog:
         self.root = root.rstrip("/")
         self.retain_versions = int(retain_versions)
         # (version, snapshot path) -> DataFrame; snapshots are immutable,
-        # see _read_snapshot.  Bounded: GC'd versions stop being requested
-        # and entries are plan objects, not data.
+        # see _read_snapshot.  Bounded: write()'s GC evicts the entries of
+        # the snapshot dirs it sweeps.
         self._df_cache: dict[tuple[int, str], DataFrame] = {}
 
     def path(self, name: str) -> str:
@@ -386,19 +386,22 @@ class Catalog:
                     pass
             else:
                 retained_dirs.add(d)
-        for entry in superseded - retained_dirs:
-            shutil.rmtree(f"{data_dir}/{entry}", ignore_errors=True)
+        swept = {f"{data_dir}/{entry}" for entry in superseded - retained_dirs}
         now = time.time()
         for entry in os.listdir(data_dir):
             if entry in retained_dirs:
                 continue
             p = f"{data_dir}/{entry}"
             try:
-                stale = now - os.path.getmtime(p) > 3600
+                if now - os.path.getmtime(p) > 3600:
+                    swept.add(p)
             except OSError:  # pragma: no cover
                 continue
-            if stale:
-                shutil.rmtree(p, ignore_errors=True)
+        for p in swept:
+            shutil.rmtree(p, ignore_errors=True)
+        # a swept snapshot can never be read again: drop its memoized plan
+        for key in [k for k in list(self._df_cache) if k[1] in swept]:
+            self._df_cache.pop(key, None)
         for entry in os.listdir(log_dir):
             if entry.startswith(".tmp_commit_"):
                 p = f"{log_dir}/{entry}"

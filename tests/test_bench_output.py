@@ -50,3 +50,14 @@ def test_summary_line_pins_round11_set():
     parsed = json.loads(line)
     assert parsed.get("queries_omitted", 0) > 0  # trim definitely happened
     assert set(pinned) <= set(parsed["queries"])  # every pinned query kept
+
+
+def test_summary_line_trims_to_one_query():
+    # two queries whose names alone overflow the budget: the trim must
+    # still try the one-query line instead of returning the two-query one
+    timings = {"a" * 1000: 2.0, "b" * 1000: 1.0}
+    line = bench.summary_line(3.0, timings, 0.1)
+    assert len(line) <= bench.TAIL_BUDGET
+    parsed = json.loads(line)
+    assert list(parsed["queries"]) == ["a" * 1000]
+    assert parsed["queries_omitted"] == 1

@@ -213,6 +213,15 @@ class TestReaderVsGC:
         # history shows exactly the retained window
         assert [r["version"] for r in cat.history("t").collect()] == [3, 2]
 
+    def test_swept_versions_leave_the_snapshot_cache(self, spark, tmp_path):
+        cat = Catalog(spark, str(tmp_path / "evict"), retain_versions=1)
+        for w in range(1, 6):
+            cat.write("t", _df(spark, w, n=5))
+            cat.read("t")  # memoizes the new version's snapshot
+        # only the current v5 survives the sweeps, in the cache as on disk
+        assert sorted(v for v, _ in cat._df_cache) == [5]
+        assert all(os.path.isdir(p) for _, p in cat._df_cache)
+
 
 class TestCompareAndSwap:
     """expect_version CAS (the unitOfWork optimistic-concurrency twin,

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from geocube_spark.client import GeocubeClient
 from geocube_spark.functions.geometry import rect_wkb
-from geocube_spark.plans.find_datasets import DatasetFilters
+from geocube_spark.plans.find_datasets import DatasetFilters, find_datasets
 from geocube_spark.plans.find_records import RecordFilters
 
 
@@ -170,6 +170,27 @@ class TestLayoutSurface:
         assert all(r["n_containers"] > 0 for r in out)
         names = [r["layout_name"] for r in out]
         assert names == sorted(names)
+
+    def test_find_container_layouts_time_window(self, client):
+        def containers(flt):
+            rows = client.find_container_layouts(flt).collect()
+            return set().union(*(r["containers"] for r in rows))
+
+        cutoff = datetime(2018, 1, 20)
+        everything = containers(DatasetFilters(order=False))
+        narrowed = containers(DatasetFilters(time_to=cutoff, order=False))
+        records = client.catalog.read("records").filter(F.col("datetime") <= cutoff)
+        want = {
+            r["container_uri"]
+            for r in client.catalog.read("datasets")
+            .filter(F.col("status") == "ACTIVE")
+            .join(records.select(F.col("id").alias("record_id")), "record_id")
+            .collect()
+        }
+        assert narrowed == want and 0 < len(narrowed) < len(everything)
+        with pytest.raises(ValueError, match="records table"):
+            find_datasets(client.catalog.read("datasets"), None,
+                          DatasetFilters(time_to=cutoff))
 
     def test_consolidation_params(self, client):
         vid = client.catalog.read("variables").first()["id"]

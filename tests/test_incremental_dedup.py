@@ -85,29 +85,6 @@ def test_empty_delta_yields_no_pairs(spark):
     assert dd.incremental_dedup(idx, empty, docs).count() == 0
 
 
-def test_index_fingerprint_cache(spark, tmp_path, monkeypatch):
-    """ensure_minhash_index rebuilds iff the source documents change."""
-    import json
-    import os
-
-    from geocube_spark import registry
-
-    monkeypatch.setattr(registry, "FIXTURE_DIR", str(tmp_path))
-    sf = "/root/testdata/sf0.001"
-    out1 = registry.ensure_minhash_index(spark, sf)
-    meta1 = json.load(open(os.path.join(out1, "_index_meta.json")))
-    mtime1 = os.path.getmtime(out1)
-    out2 = registry.ensure_minhash_index(spark, sf)
-    assert out1 == out2
-    assert os.path.getmtime(out2) == mtime1, "unchanged source must not rebuild"
-    meta1["source_fp"] = "stale"
-    with open(os.path.join(out1, "_index_meta.json"), "w") as f:
-        json.dump(meta1, f)
-    registry.ensure_minhash_index(spark, sf)
-    meta3 = json.load(open(os.path.join(out1, "_index_meta.json")))
-    assert meta3["source_fp"] != "stale", "stale fingerprint must trigger rebuild"
-
-
 def test_stream_accumulates_to_batch_run(spark, tmp_path):
     """Two micro-batches through the append-only index protocol find the
     SAME pair set as the one-shot batch run over the full delta — every
