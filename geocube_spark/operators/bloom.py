@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from geocube_spark.functions.text import md5_bucket
 from geocube_spark.operators.retrieval import ngrams_expr, ngrams_sql, tokens_expr, tokens_sql
+from geocube_spark.session import checkpoint
 
 BLOOM_M_BITS = 4096  # filter size in bits (128 32-bit words)
 BLOOM_K = 3  # hash functions
@@ -137,7 +138,7 @@ def bloom_decontamination_report(
             "is_eval",
             F.array_distinct(ngrams_expr(F.col("t"), n)).alias("grams"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, lazy=True)
     )
     eval_g = base.filter("is_eval").select(F.explode("grams").alias("g")).distinct()
     train = base.filter(~F.col("is_eval") & (F.size("grams") > 0))

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geocube_spark.operators.retrieval import tokens_expr, tokens_sql
+from geocube_spark.session import checkpoint
 
 
 def _spaced_chars(word: Column) -> Column:
@@ -95,7 +96,7 @@ def bpe_train(
     for r in range(1, n_merges + 1):
         # cut lineage: vocab feeds BOTH this round's pair counts and the
         # rewrite; without the eager checkpoint the DAG doubles per round
-        vocab = vocab.localCheckpoint()
+        vocab = checkpoint(vocab)
         t = F.split(F.col("spaced"), " ")
         pairs = vocab.select(
             F.explode(

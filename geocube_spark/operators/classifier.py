@@ -33,29 +33,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geocube_spark.session import checkpoint
+
 LR = 0.5
 ROUNDS = 5
 W_DECIMALS = 10
 
 # feature scale divisors keep |z| ~ O(1) so the rational squash has slope
 FEATS = [("bias", None, 1.0), ("chars", "n_chars", 300.0), ("toks", "tc", 60.0), ("mwl", "mwl", 10.0)]
-
-
-def _lazy_checkpoints_safe(df: DataFrame) -> bool:
-    """Lazy per-round checkpoints rely on the NEXT round's broadcast build
-    being an ordinary job.  With AQE on (this repo's session default) heavy
-    stages still run as normal query stages; with AQE off, a lazy frame's
-    first materialization happens INSIDE a BroadcastExchange future, so a
-    large corpus scan would race spark.sql.broadcastTimeout (300 s) and the
-    broadcast thread pool — a failure mode the eager form cannot hit.
-    Fall back to eager checkpoints on non-AQE sessions."""
-    try:
-        return (
-            df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true").lower()
-            == "true"
-        )
-    except Exception:  # pragma: no cover - conf surface drift
-        return False
 
 
 def _squash(z: Column) -> Column:
@@ -101,16 +86,9 @@ def train_quality_classifier(
     that materializes them, the distributed-GD barrier the algorithm has
     anyway — which truncates the recursive plan without a dedicated job
     per round (the pagerank-round fusion).  Weight VALUES are untouched
-    (10-dp rounding happens before the checkpoint).  The fusion is gated
-    on AQE (see _lazy_checkpoints_safe): on a non-AQE session the rounds
-    checkpoint eagerly so no corpus scan ever runs inside a broadcast
-    future's timeout window."""
-    lazy = _lazy_checkpoints_safe(docs)
-    feats = (
-        _feature_frame(docs, label).localCheckpoint(eager=not lazy)
-        if feats is None
-        else feats
-    )
+    (10-dp rounding happens before the checkpoint)."""
+    if feats is None:
+        feats = checkpoint(_feature_frame(docs, label), lazy=True)
     names = [f[0] for f in FEATS]
     w = feats.sparkSession.range(1).select(
         *[F.lit(0.0).alias(f"w_{n}") for n in names]
@@ -130,7 +108,7 @@ def train_quality_classifier(
                 for n in names
             ]
         )
-        w = grads.localCheckpoint(eager=not lazy)
+        w = checkpoint(grads, lazy=True)
     return w
 
 
@@ -141,9 +119,7 @@ def classifier_report(
     0.5 threshold plus the (shared) final weights — the quality-filter
     acceptance report.  Integer counts + 6-dp weights keep the contract
     robust."""
-    feats = _feature_frame(docs, label).localCheckpoint(
-        eager=not _lazy_checkpoints_safe(docs)
-    )
+    feats = checkpoint(_feature_frame(docs, label), lazy=True)
     w = train_quality_classifier(docs, label, rounds, lr, feats=feats)
     names = [f[0] for f in FEATS]
     z = sum(

@@ -308,7 +308,7 @@ def union_footprints(
         ]
     )
 
-    def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rects = list(zip(pdf["_x0"], pdf["_y0"], pdf["_x1"], pdf["_y1"]))
         polys, area = rect_union(rects)
         row = dict(zip(group_cols, key))
@@ -366,7 +366,7 @@ def union_polygon_footprints(
     )
     vc = vertex_cols
 
-    def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cols = [pdf[c].to_numpy() for c in vc]
         polys = [
             [(cols[0][i], cols[1][i]), (cols[2][i], cols[3][i]),
@@ -423,7 +423,7 @@ def valid_shape_per_cell_general(
     )
     vc = vertex_cols
 
-    def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         cols = [pdf[c].to_numpy() for c in vc]
         bounds = [pdf[c].to_numpy() for c in ("_cx0", "_cy0", "_cx1", "_cy1")]
         clipped = []
@@ -499,7 +499,7 @@ def valid_shape_per_cell(
         ]
     )
 
-    def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         rects = list(zip(pdf["_x0"], pdf["_y0"], pdf["_x1"], pdf["_y1"]))
         _, area = rect_union(rects)
         row = {
@@ -768,7 +768,7 @@ def consolidate_to_mucog(
         fields.append(StructField("error", StringType(), True))
     out_schema = StructType(fields)
 
-    def _assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if has_time:
             img_keys = sorted(set(zip(pdf["_t"], pdf["_rid"])))
             groups = {k: pdf[(pdf["_t"] == k[0]) & (pdf["_rid"] == k[1])] for k in img_keys}
@@ -914,7 +914,7 @@ def consolidate_to_mucog(
 
     if on_error == "capture":
 
-        def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             try:
                 out = _assemble(key, pdf)
                 out["error"] = None

@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from geocube_spark.session import checkpoint
+
 _SEG_SCHEMA = StructType(
     [
         StructField("level_i", IntegerType(), False),
@@ -207,7 +209,7 @@ def contour_report(
 
     segs = contour_segments(tiles, levels, block, px_col).withColumn(
         "sid", F.monotonically_increasing_id()
-    ).localCheckpoint()
+    ).transform(checkpoint)
 
     def key(xc, yc):
         # exact pair-pack: quantized coords stay < 2^31, product < 2^63

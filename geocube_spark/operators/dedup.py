@@ -34,6 +34,7 @@ from geocube_spark.functions.vectors import (
     simhash_expr,
     word_shingles_expr,
 )
+from geocube_spark.session import checkpoint
 
 
 def _parallelize(df: DataFrame) -> DataFrame:
@@ -89,7 +90,7 @@ def shingle_sets(
     The exact-Jaccard self-join and the minhash signature both derive from
     this one frame, so a caller that needs several of them computes the
     tokenize+shingle kernel ONCE (guide §1.2: remove duplicate passes) by
-    lazily ``localCheckpoint``-ing this frame and passing it via the
+    lazily checkpointing this frame and passing it via the
     ``shingles=`` parameter the consumers below accept.  Value equivalence
     is exact: minhash's running min is idempotent, so hashing the DISTINCT
     set gives bit-identical signatures to hashing every k-gram occurrence.
@@ -222,9 +223,9 @@ def minhash_lsh_candidates(
     # the self-join references the bucket frame twice, and one side becomes
     # a BroadcastExchange — which reuses NOTHING of the other side's plan —
     # so without this the tokenize+shingle+signature kernel runs once per
-    # side.  A lazy localCheckpoint makes the first side's materialization
+    # side.  A lazy checkpoint makes the first side's materialization
     # feed both (guide §1.2); bucket rows are 3 narrow columns, ~24 B/row.
-    buckets = buckets.localCheckpoint(eager=False)
+    buckets = checkpoint(buckets, lazy=True)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -263,7 +264,7 @@ def minhash_near_duplicates(
     # candidate subset), so one is built only when the caller passes it.
     cands = minhash_lsh_candidates(
         documents, text_col, num_hashes, bands, shingle_k, seed, shingles=shingles
-    ).localCheckpoint()
+    ).transform(checkpoint)
     # exact-verify shingles are computed ONLY for docs that appear in a
     # candidate pair (a tiny fraction of the corpus): semi-join first
     cand_ids = (
@@ -363,7 +364,7 @@ def incremental_dedup(
     )
     # referenced three times below (corpus join + both sides of the delta
     # self-join): one materialization instead of three signature kernels
-    delta_idx = delta_idx.localCheckpoint(eager=False)
+    delta_idx = checkpoint(delta_idx, lazy=True)
     d = delta_idx.alias("d")
     c = corpus_index.alias("c")
     vs_corpus = (
@@ -395,7 +396,7 @@ def incremental_dedup(
     # projections), and Spark re-plans — and would re-run the two LSH
     # joins — per reference.  In the real pipeline the delta's buckets are
     # persisted anyway before being appended to the corpus index.
-    cands = vs_corpus.unionByName(vs_delta).distinct().localCheckpoint()
+    cands = checkpoint(vs_corpus.unionByName(vs_delta).distinct())
     cand_ids = (
         cands.select(F.col("doc_a").alias("doc_id"))
         .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
@@ -450,7 +451,7 @@ def ngram_jaccard_pairs(
     arr = (
         shingles
         if shingles is not None
-        else shingle_sets(documents, text_col, shingle_k).localCheckpoint(eager=False)
+        else checkpoint(shingle_sets(documents, text_col, shingle_k), lazy=True)
     )
     sh = arr.select(
         "doc_id",
@@ -580,7 +581,7 @@ def simhash_all_pairs(
     # byte-LUT popcount: works on any numpy (np.bitwise_count needs >= 2.0)
     lut = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
-    def pairs(key, pdf_a, pdf_b):
+    def pairs(key: tuple, pdf_a: pd.DataFrame, pdf_b: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf_a) or not len(pdf_b):
             return pd.DataFrame({"doc_a": [], "doc_b": [], "hamming": []})
         ids_a = pdf_a["id"].to_numpy(dtype=np.int64)
@@ -883,16 +884,13 @@ def connected_components(
         return leaves.union(centers).where(F.col("u") != F.col("v")).distinct()
 
     def _checkpoint_and_sign(e: DataFrame):
-        """LAZY checkpoint fused with the convergence signature (the
-        kcenter/pagerank fusion): the signature's full-scan aggregate is
-        the action that materializes — and persists — the checkpointed
-        frame, so the dedicated checkpoint job disappears (one job per
-        round instead of two).  The fusion is only sound because the
-        signature runs IMMEDIATELY on the lazy frame, before any
-        multi-scan consumer — this helper couples the two structurally so
-        a future edit cannot separate them (bit_xor, not sum: order-
+        """Lazy checkpoint fused with the convergence signature: the
+        signature's full-scan aggregate materializes the frame, one job per
+        round instead of two.  Sound only because the signature runs
+        IMMEDIATELY on the lazy frame, before any multi-scan consumer, and
+        this helper keeps the two together (bit_xor, not sum: order-
         insensitive and cannot overflow ANSI longs)."""
-        e = e.localCheckpoint(eager=False)
+        e = checkpoint(e, lazy=True)
         row = e.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("chk"),

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from geocube_spark.functions.vectors import cosine_expr, cosine_sql
+from geocube_spark.session import checkpoint
 
 _RESULT_SCHEMA = StructType(
     [
@@ -67,19 +68,14 @@ def kcenter_sample(
     radius."""
     first = emb.orderBy(id_col).limit(1).collect()[0]
     chosen = [(0, int(first[id_col]), 0.0)]
-    # LAZY localCheckpoint: each round has exactly one consumer action (the
-    # TakeOrdered(1) argmax), which materializes — and checkpoints — the
-    # folded frame as a side effect.  An eager checkpoint here would spend
-    # a SECOND full pass per round just to persist what the argmax is
-    # about to compute anyway: 2k jobs for k rounds instead of k (guide
-    # §1.2: remove passes before tuning anything else).  Lineage stays cut
-    # per round exactly as before — the checkpoint still happens, only its
-    # materialization is fused into the argmax job.
+    # lazy checkpoints: each round's TakeOrdered(1) argmax materializes the
+    # folded frame, so k rounds take k jobs instead of 2k (guide §1.2);
+    # lineage is still cut every round
     cur = emb.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("v"),
         (1 - cosine_expr(F.col(vec_col), _vec_lit(first[vec_col]))).alias("mind"),
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, lazy=True)
     for r in range(1, k):
         far = cur.orderBy(F.desc("mind"), "vec_id").limit(1).collect()[0]
         chosen.append((r, int(far["vec_id"]), _round_half_up6(far["mind"])))
@@ -89,7 +85,7 @@ def kcenter_sample(
             F.least(
                 F.col("mind"), 1 - cosine_expr(F.col("v"), _vec_lit(far["v"]))
             ).alias("mind"),
-        ).localCheckpoint(eager=False)
+        ).transform(checkpoint, lazy=True)
     return spark.createDataFrame(chosen, _RESULT_SCHEMA)
 
 

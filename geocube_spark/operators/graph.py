@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geocube_spark.functions.joinpick import maybe_broadcast as _maybe_broadcast
+from geocube_spark.session import checkpoint
 
 
 def pagerank(
@@ -43,20 +44,16 @@ def pagerank(
     # re-executed R times (measured 2x end-to-end on the purchase graph)
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint()
-    # LAZY checkpoints from here down (the kcenter fusion): each frame's
-    # first consumer action materializes — and persists — it as a side
-    # effect, so the dedicated per-frame materialization job disappears.
-    # nodes is materialized by its own count() (a scalar the plan needs as
-    # a literal anyway), nd by round 1's first job, and each round's rank
-    # frame by that round's dangling-mass broadcast build.  Lineage is cut
-    # exactly as before — only the extra pass per frame is gone (guide
-    # §1.2: remove passes first).
+    ).transform(checkpoint)
+    # lazy checkpoints from here down (the kcenter fusion): nodes is
+    # materialized by its own count() (a scalar the plan needs as a literal
+    # anyway), nd by round 1's first job, and each round's rank frame by
+    # that round's dangling-mass broadcast build
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, lazy=True)
     )
     n_nodes = nodes.count()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -65,12 +62,12 @@ def pagerank(
     nd = (
         nodes.join(deg, nodes["node"] == deg["src"], "left")
         .select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, lazy=True)
     )
     ranks = nd.select("node", "deg", F.lit(1.0 / n_nodes).alias("rank"))
     # rank row ~ node string + long + double; 64 bytes covers it with slack
     for _ in range(iterations):
-        ranks = ranks.localCheckpoint(eager=False)
+        ranks = checkpoint(ranks, lazy=True)
         dangling = ranks.filter(F.col("deg") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
         )
@@ -178,23 +175,21 @@ def label_propagation(
     lazy chaining would re-execute the whole prefix 2^R times.
     """
     fwd = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    # LAZY checkpoints (the kcenter fusion, as in pagerank): e and nodes
-    # are both single-consumer-at-a-time frames, so the first action —
-    # nodes.count() — materializes the whole chain in ONE job instead of
-    # three; each round's label frame is materialized by that round's
-    # broadcast build.  Lineage cuts are unchanged.
+    # lazy checkpoints (as in pagerank): the first action, nodes.count(),
+    # materializes e and nodes in ONE job; each round's label frame is
+    # materialized by that round's broadcast build
     e = (
         fwd.unionByName(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, lazy=True)
     )
-    nodes = e.select(F.col("a").alias("node")).distinct().localCheckpoint(eager=False)
+    nodes = checkpoint(e.select(F.col("a").alias("node")).distinct(), lazy=True)
     # the per-round label frame is O(nodes); its measured count drives the
     # broadcast-vs-shuffle join choice exactly as in pagerank
     n_nodes = nodes.count()
     labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(iterations):
-        labels = labels.localCheckpoint(eager=False)
+        labels = checkpoint(labels, lazy=True)
         lab = _maybe_broadcast(labels, n_nodes, 64)
         counts = (
             e.join(lab, e["b"] == lab["node"])

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geocube_spark.session import checkpoint
+
 # (di, dj, distance); list order is the deterministic tiebreak priority
 D8_OFFSETS = [
     (-1, -1, 1.4142135623730951),
@@ -122,7 +124,7 @@ def flow_accumulation(cells: DataFrame, edges: DataFrame, rounds: int) -> DataFr
     # its own — it is the t == m slice of W_m
     w = edges.select(
         "i", "j", "to_i", "to_j", F.lit(1).alias("t")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, lazy=True)
     m = 1
     while m < rounds:
         comp = (
@@ -146,7 +148,7 @@ def flow_accumulation(cells: DataFrame, edges: DataFrame, rounds: int) -> DataFr
         w = w.unionByName(comp.filter(F.col("t") <= rounds))
         m *= 2
         if m < rounds:
-            w = w.localCheckpoint(eager=False)
+            w = checkpoint(w, lazy=True)
     inflow = w.groupBy(F.col("to_i").alias("i"), F.col("to_j").alias("j")).agg(
         F.count(F.lit(1)).alias("inflow")
     )

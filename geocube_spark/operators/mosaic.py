@@ -410,7 +410,7 @@ def bap_composite(
     )
     nk = len(keys)
 
-    def pick(key, pdf):
+    def pick(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         order = np.argsort(pdf["t"].to_numpy(), kind="stable")
         n_px = len(pdf["px"].iloc[0])
         best_score = np.full(n_px, -1.0)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from geocube_spark.operators.retrieval import tokens_expr, tokens_sql
+from geocube_spark.session import checkpoint
 
 
 def positional_kgram_hashes(
@@ -80,9 +81,7 @@ def duplicated_passage_spans(
     # side): tokenize+hash once via a lazy checkpoint — rows are three
     # longs, so the cache is far smaller than re-running the kernel (the
     # LM-family sharing pattern)
-    grams = positional_kgram_hashes(docs, k, text_col, id_col).localCheckpoint(
-        eager=False
-    )
+    grams = checkpoint(positional_kgram_hashes(docs, k, text_col, id_col), lazy=True)
     dup_hashes = (
         grams.groupBy("gram_hash")
         .agg(F.count(F.lit(1)).alias("n"))

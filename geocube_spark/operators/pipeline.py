@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from geocube_spark.functions.text import normalized_md5, quality_score, token_count
 from geocube_spark.operators.dedup import dedup_exact
+from geocube_spark.session import checkpoint
 
 
 def deterministic_sample_expr(key: Column, fraction: float) -> Column:
@@ -245,7 +246,7 @@ def dsir_importance(
     doc_b = stream.groupBy("doc_id", "bucket").agg(
         F.count(F.lit(1)).alias("c_doc"),
         F.first("is_target").alias("is_target"),
-    ).localCheckpoint(eager=False)  # 4 consumers; Catalyst does not reuse
+    ).transform(checkpoint, lazy=True)  # 4 consumers; Catalyst does not reuse
     # the exchange.  LAZY: the first consumer (the totals broadcast build)
     # materializes it, so the dedicated checkpoint pass disappears (the
     # kcenter fusion).

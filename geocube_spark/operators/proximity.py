@@ -215,7 +215,7 @@ def _block_edt_fn(block: int, ring: int, cap: int):
     halo = ring * b
     win = b + 2 * halo
 
-    def fn(key, pdf):
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         bx, by = int(key[0]), int(key[1])
         mask = np.zeros((win, win), dtype=bool)
         n_px = 0
@@ -333,7 +333,7 @@ def _block_edt_map_fn(
     n_extra = len(extra_keys)
     out_cols = list(extra_keys) + list(carry) + ["block_x", "block_y", "d2"]
 
-    def fn(key, pdf):
+    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         out = {k: [v] for k, v in zip(extra_keys, key)}
         bx, by = int(key[n_extra]), int(key[n_extra + 1])
         mask = np.zeros((win, win), dtype=bool)

@@ -117,7 +117,7 @@ def rasterize_polygons(
         "pid", "tx", "ty", "pwkb", "bv", "gi", "gj", "cx", "cy"
     )
 
-    def refine(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def refine(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         wkb = pdf["pwkb"].iloc[0]

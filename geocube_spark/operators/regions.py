@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from geocube_spark.session import checkpoint
+
 _PARTS_SCHEMA = StructType(
     [
         StructField("kind", StringType(), False),  # 'region' | 'strip'
@@ -146,7 +148,7 @@ def _label_and_merge(
     are the expensive passes)."""
     from geocube_spark.operators.dedup import connected_components
 
-    parts = _block_parts(tiles, block, px_col).localCheckpoint()
+    parts = checkpoint(_block_parts(tiles, block, px_col))
     regions = parts.filter(F.col("kind") == "region").select("lbl", "val", "n_px")
     strips = parts.filter(F.col("kind") == "strip").select(
         "border", "pos", "side", "val", "lbl"
@@ -350,7 +352,7 @@ def polygonize_report(
     units, holes via the Euler characteristic (see module comment)."""
     from geocube_spark.operators.dedup import connected_components
 
-    pixels = region_pixels(tiles, block, px_col).localCheckpoint()
+    pixels = checkpoint(region_pixels(tiles, block, px_col))
 
     right = pixels.select(
         F.col("gi").alias("ri"), (F.col("gj") - 1).alias("rj"),
@@ -370,7 +372,7 @@ def polygonize_report(
     ).filter(F.col("val") == F.col("dval")).select(
         F.col("lbl").alias("lbl_a"), F.col("dlbl").alias("lbl_b")
     )
-    adj = adj_r.unionByName(adj_d).localCheckpoint()
+    adj = checkpoint(adj_r.unionByName(adj_d))
 
     stitch = (
         adj.filter(F.col("lbl_a") != F.col("lbl_b"))
@@ -462,7 +464,7 @@ def _pixel_components(tiles: DataFrame, block: int, px_col: str) -> DataFrame:
     polygonize_report and polygonize_wkb)."""
     from geocube_spark.operators.dedup import connected_components
 
-    pixels = region_pixels(tiles, block, px_col).localCheckpoint()
+    pixels = checkpoint(region_pixels(tiles, block, px_col))
     right = pixels.select(
         F.col("gi").alias("ri"), (F.col("gj") - 1).alias("rj"),
         F.col("val").alias("rval"), F.col("lbl").alias("rlbl"),

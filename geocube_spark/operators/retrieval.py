@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geocube_spark.session import checkpoint
+
 # ------------------------------------------------------------- tokenization
 # One canonical tokenization shared by engine and oracle: lowercase, every
 # non-alphanumeric run -> single space, trim, split.  Matching DuckDB SQL in
@@ -121,7 +123,7 @@ def bm25_scores(
             F.col(id_col).alias("doc_id"), tokens_expr(F.col(text_col)).alias("toks")
         )
         .select("doc_id", "toks", F.size("toks").alias("dl"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, lazy=True)
     )
 
     stats = toks.agg(
@@ -416,7 +418,7 @@ def unigram_logprob(
     # explode output is bigger than the corpus and measured slower.
     toks = docs.select(
         F.col(id_col).alias("doc_id"), tokens_expr(F.col(text_col)).alias("t")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, lazy=True)
     terms = toks.select("doc_id", F.explode("t").alias("term"))
     tf = terms.groupBy("term").agg(F.count(F.lit(1)).alias("tf"))
     total = tf.agg(F.sum("tf").alias("total"))
@@ -503,7 +505,7 @@ def distributed_rank(df: DataFrame, order_cols: list[str]) -> DataFrame:
     part = (
         df.repartitionByRange(*[F.col(c) for c in order_cols])
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     counts = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_c"))
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
@@ -680,7 +682,7 @@ def nb_lang_confusion(
             tokens_expr(F.col(text_col)).alias("t"),
         )
         .filter(F.size("t") > 0)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, lazy=True)
     )
     terms = toks.select("doc_id", "actual", F.explode("t").alias("term"))
 
@@ -812,7 +814,7 @@ def _bigram_streams(docs, id_col: str, text_col: str):
             F.col(id_col).alias("doc_id"), tokens_expr(F.col(text_col)).alias("t")
         )
         .filter(F.size("t") > 0)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, lazy=True)
     )
     pos = toks.select("doc_id", F.posexplode("t").alias("i", "term"))
     uni = pos.groupBy("term").agg(F.count(F.lit(1)).alias("c1"))

@@ -1014,7 +1014,7 @@ def embedding_all_pairs_exact(
     )
     thr = float(threshold)
 
-    def gemm(key, pdf_a, pdf_b):
+    def gemm(key: tuple, pdf_a: pd.DataFrame, pdf_b: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf_a) or not len(pdf_b):
             return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
         ids_a = pdf_a["id"].to_numpy(dtype=np.int64)

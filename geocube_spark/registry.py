@@ -49,6 +49,7 @@ from geocube_spark.operators.pyramid import build_level
 from geocube_spark.plans.cube import group_by_record
 from geocube_spark.plans.find_datasets import DatasetFilters, find_datasets
 from geocube_spark.plans.find_records import RecordFilters, find_records
+from geocube_spark.session import checkpoint
 
 FIXTURE_DIR = fixtures.default_dir()
 
@@ -2000,7 +2001,7 @@ def minhash_lsh_candidates(spark, sf_dir):
     docs = _docs(spark, sf_dir)
     # ONE tokenize+shingle kernel for both sides (LSH signatures + exact
     # verify): lazily checkpoint the shared shingle-set frame (guide §1.2)
-    sh = dd.shingle_sets(docs).localCheckpoint(eager=False)
+    sh = checkpoint(dd.shingle_sets(docs), lazy=True)
     cands = dd.minhash_lsh_candidates(docs, num_hashes=32, bands=8, shingles=sh)
     true_pairs = dd.ngram_jaccard_pairs(
         docs, shingle_k=3, threshold=0.5, shingles=sh
@@ -2080,7 +2081,7 @@ def minhash_lsh_skew(spark, sf_dir):
             ),
         ).otherwise(F.col("text")),
     )
-    sh = dd.shingle_sets(docs).localCheckpoint(eager=False)
+    sh = checkpoint(dd.shingle_sets(docs), lazy=True)
     cands = dd.minhash_lsh_candidates(docs, num_hashes=32, bands=8, shingles=sh)
     true_pairs = dd.ngram_jaccard_pairs(
         docs, shingle_k=3, threshold=0.5, shingles=sh
@@ -2344,7 +2345,7 @@ def incremental_dedup(spark, sf_dir):
     idx = spark.read.parquet(ensure_minhash_index(spark, sf_dir))
     # the delta signatures, the candidate verify and the exact twin all
     # read ONE lazily-checkpointed shingle frame (delta ⊂ docs)
-    sh = dd.shingle_sets(docs).localCheckpoint(eager=False)
+    sh = checkpoint(dd.shingle_sets(docs), lazy=True)
     verified = dd.incremental_dedup(
         idx,
         delta,
@@ -2397,7 +2398,7 @@ def simhash_near_duplicates(spark, sf_dir):
     # both paths consume the SAME fingerprints: hash the corpus once and
     # checkpoint (lazily — the first consumer materializes it), instead of
     # tokenizing + simhashing the text twice (one corpus scan saved)
-    fp = dd.simhash_fingerprints(docs).localCheckpoint(eager=False)
+    fp = checkpoint(dd.simhash_fingerprints(docs), lazy=True)
     lsh = dd.simhash_near_duplicates(
         docs, max_hamming=3, fingerprints=fp
     ).select("doc_a", "doc_b")
@@ -9288,7 +9289,7 @@ def heavy_hitters(spark, sf_dir):
     # pattern — the explode re-runs cheaply per consumer over the cache)
     toks = _docs(spark, sf_dir).select(
         tokens_expr(F.col("text")).alias("t")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, lazy=True)
     terms = toks.select(F.explode("t").alias("term"))
     cands = heavy_hitter_candidates(terms, k=k)
     exact = terms.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
@@ -9347,7 +9348,7 @@ def countmin_accuracy_q(spark, sf_dir):
     # array-level checkpoint (the LM-family pattern)
     toks = _docs(spark, sf_dir).select(
         tokens_expr(F.col("text")).alias("t")
-    ).localCheckpoint(eager=False)
+    ).transform(checkpoint, lazy=True)
     terms = toks.select(F.explode("t").alias("term"))
     return countmin_accuracy(terms, top=20)
 

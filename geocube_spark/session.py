@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -61,3 +61,14 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def checkpoint(df: DataFrame, lazy: bool = False) -> DataFrame:
+    """``df.localCheckpoint``: eager, or lazy when ``lazy`` is asked for and
+    the session runs AQE.  A lazy checkpoint is materialized by its first
+    consumer, which saves a dedicated job.  With AQE off that consumer can
+    be a BroadcastExchange future, where a large scan races
+    spark.sql.broadcastTimeout and the broadcast thread pool; an eager
+    checkpoint cannot, so AQE-off sessions always get one."""
+    aqe = df.sparkSession.conf.get("spark.sql.adaptive.enabled")
+    return df.localCheckpoint(eager=not (lazy and aqe.lower() == "true"))

@@ -18,57 +18,61 @@ the DuckDB oracle (bucketing must never change answers).
 
 from __future__ import annotations
 
+import hashlib
+import os
+import sys
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = 8, mode: str = "overwrite"
-) -> None:
-    """Persist ``df`` as a bucketed+sorted managed table on ``key``.
-
-    The pre-write repartition on (n_buckets, key) yields exactly ONE file
-    per bucket — minimal file count and the layout a reader (or a future
-    sorted-scan optimizer) can trust.  Note Spark 3+ keeps a residual
-    in-partition Sort under the SMJ regardless (sortBy read-side trust is
-    legacy-gated, SPARK-28621); the ELIMINATED operator is the Exchange —
-    the only one that costs network at 100 TB."""
-    (
-        df.repartition(n_buckets, F.col(key))
-        .write.mode(mode)
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .saveAsTable(table)
-    )
 
 
 def ensure_bucketed_catalog(
     spark: SparkSession, fixture_dir: str, n_buckets: int = 8
 ) -> tuple[str, str]:
-    """Materialize the fixture datasets/records as co-bucketed tables
-    (same key, same bucket count — the co-location precondition) once per
-    warehouse; returns the two table names."""
-    dt, rt = "gc_bucketed_datasets", "gc_bucketed_records"
-    if not spark.catalog.tableExists(dt) or not spark.catalog.tableExists(rt):
-        # no persistent metastore in this deployment: a previous session's
-        # table DATA may survive in the warehouse dir while its metadata
-        # (incl. the bucket spec) did not — the files are a derived cache
-        # of the fixtures, so clear and rebuild
-        import shutil
-        from urllib.parse import urlparse
+    """Write the fixture datasets/records once, in the fixture cache, as
+    co-bucketed files (same key, same bucket count — the co-location
+    precondition; ONE file per bucket), and register them in this session
+    as external tables; returns the two table names.  Every session
+    registers the files again and none rewrites them.  Spark 3+ keeps a
+    residual in-partition Sort under the SMJ (SPARK-28621); the ELIMINATED
+    operator is the Exchange — the only one that costs network at 100 TB."""
+    from geocube_spark import fixtures
 
-        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-        for t in (dt, rt):
-            shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-        datasets = spark.read.parquet(f"{fixture_dir}/datasets.parquet").select(
+    out = os.path.join(os.path.abspath(fixture_dir), f"bucketed_catalog_{n_buckets}")
+    tag = hashlib.sha1(out.encode()).hexdigest()[:10]
+    frames = {
+        "datasets": spark.read.parquet(f"{fixture_dir}/datasets.parquet").select(
             "id", "record_id", "instance_id", "container_uri", "status"
-        )
-        records = spark.read.parquet(f"{fixture_dir}/records.parquet").select(
+        ),
+        "records": spark.read.parquet(f"{fixture_dir}/records.parquet").select(
             F.col("id").alias("record_id"), "name", "datetime"
+        ),
+    }
+    tables = {name: f"gc_bucketed_{name}_{tag}" for name in frames}
+
+    def build():
+        for name, df in frames.items():
+            (
+                df.repartition(n_buckets, "record_id")
+                .write.mode("overwrite").option("path", f"{out}/{name}")
+                .bucketBy(n_buckets, "record_id")
+                .sortBy("record_id")
+                .saveAsTable(tables[name])
+            )
+
+    fixtures.materialize_once(
+        out,
+        build,
+        inputs=[f"{fixture_dir}/{name}.parquet" for name in frames],
+        code=[sys.modules[__name__]],
+    )
+    for name, table in tables.items():
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {table} ({frames[name].schema.toDDL()})"
+            f" USING parquet CLUSTERED BY (record_id) SORTED BY (record_id)"
+            f" INTO {n_buckets} BUCKETS LOCATION '{out}/{name}'"
         )
-        write_bucketed(datasets, dt, "record_id", n_buckets)
-        write_bucketed(records, rt, "record_id", n_buckets)
-    return dt, rt
+    return tables["datasets"], tables["records"]
 
 
 def bucketed_join(spark: SparkSession, dt: str, rt: str) -> DataFrame:

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from geocube_spark.operators import dedup as dd
+from geocube_spark.session import checkpoint
 
 
 def run_incremental_dedup_stream(
@@ -51,7 +52,7 @@ def run_incremental_dedup_stream(
     def on_batch(batch: DataFrame, epoch_id: int) -> None:
         if not batch.take(1):
             return
-        batch = batch.localCheckpoint()
+        batch = checkpoint(batch)
         idx = spark.read.parquet(index_path)
         pairs = dd.incremental_dedup(
             idx, batch, all_docs, text_col, threshold, num_hashes, bands,

@@ -21,6 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geocube_spark import session
+
 # ---------------------------------------------------------------------------
 # The COMPLETE job state machine (reference internal/geocube/job.go:28-130
 # states/levels, 350-641 triggers) — both job types, retry/cancel/rollback
@@ -623,7 +625,7 @@ def run_trending_stream(
     cat = Catalog(spark, counts_dir)
 
     def merge(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.localCheckpoint()
+        batch = session.checkpoint(batch)
         if cat.exists("trending_counts"):
             cur = cat.read("trending_counts")
             keep = cur.join(

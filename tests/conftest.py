@@ -54,8 +54,9 @@ def assert_df_matches_duckdb(spark_df, duck_con, sql, sort_cols=None, tol=1e-9):
     ), f"columns differ: {sorted(sdf.columns)} vs {sorted(ddf.columns)}"
     cols = sorted(sdf.columns, key=str.lower)
     sdf = sdf[cols]
-    ddf = ddf[[c for c in ddf.columns if c.lower() in {x.lower() for x in cols}]]
-    ddf.columns = [c for c in cols]  # align case
+    by_lower = {c.lower(): c for c in ddf.columns}
+    ddf = ddf[[by_lower[c.lower()] for c in cols]]
+    ddf.columns = cols  # align case
     assert len(sdf) == len(ddf), f"row counts differ: {len(sdf)} vs {len(ddf)}"
 
     def norm(row):

@@ -95,7 +95,8 @@ def test_plans_md_row_count_matches_registry():
 
     from geocube_spark import registry
 
-    with open("/root/repo/PLANS.md") as f:
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(repo, "PLANS.md")) as f:
         names = {
             m.group(1)
             for line in f

@@ -15,7 +15,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geocube_spark import registry  # noqa: E402
 from geocube_spark.session import get_spark  # noqa: E402

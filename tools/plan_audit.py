@@ -18,10 +18,12 @@ every query; this script regenerates the PLANS.md inventory.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # Queries whose plan legitimately contains a BroadcastNestedLoopJoin; the
 # pytest twin asserts each entry STILL uses one (stale entries fail CI).
@@ -185,7 +187,7 @@ if __name__ == "__main__":
                 " cap) — literal-heavy expression baked into the plan?"
             )
     if "--write-md" in sys.argv:
-        with open("/root/repo/PLANS.md", "w") as f:
+        with open(os.path.join(REPO, "PLANS.md"), "w") as f:
             f.write(to_markdown(rows))
         print("wrote PLANS.md")
     for name, m in rows.items():

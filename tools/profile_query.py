@@ -14,11 +14,12 @@ UI is the measurement instrument; this is the headless equivalent).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geocube_spark import registry  # noqa: E402
 from geocube_spark.session import get_spark  # noqa: E402

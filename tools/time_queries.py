@@ -10,11 +10,12 @@ line per query: median, min, max over N runs (default 3).
 
 from __future__ import annotations
 
+import os
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geocube_spark import registry  # noqa: E402
 from geocube_spark.session import get_spark  # noqa: E402
